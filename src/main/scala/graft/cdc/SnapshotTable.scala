@@ -4,8 +4,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets
 
@@ -42,6 +44,12 @@ import java.nio.charset.StandardCharsets
  * and each bucket's schema version; readers align every bucket group to the
  * current schema (SchemaEvolution.alignTo) so old snapshots remain readable
  * after column add / type widen.
+ *
+ * Reads: every scan (read, the copy-on-write survivor read in merge, the
+ * merge-on-read base + delta reconcile, compact, readVersion) is planned
+ * from the manifest's bucket -> directory map through [[ManifestFileIndex]]:
+ * one parquet relation per written schema version, the bucket id as the
+ * `bucket` partition value, and no Spark job to discover the files.
  */
 /**
  * @param mode "cow" (copy-on-write: each epoch rewrites touched buckets —
@@ -232,10 +240,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     manifestVersions().drop(3).foreach(v => fs.delete(manifestFile(v), false))
   }
 
-  def currentSchema(): StructType = effectiveManifest() match {
-    case Some(m) => DataType.fromJson(m.schemas(m.currentSchemaId.toString)).asInstanceOf[StructType]
-    case None    => Model.tableSchemaV0
-  }
+  def currentSchema(): StructType = schemaOf(effectiveManifest())
 
   /** durable (manifest) OR staged: both fence re-application in-process;
     * only durable survives a crash. */
@@ -257,13 +262,15 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     pmod(hash(col("repo"), col("path")), lit(numBuckets))
 
   /** Read the current snapshot (all buckets), aligned to the current schema,
-    * with the `bucket` partition column present. */
+    * with the `bucket` partition column present. The scan is planned from the
+    * manifest's bucket -> directory map: no Spark listing job. */
   def read(): DataFrame = readBuckets(None)
 
   /** Read only the given buckets (partition pruning: each bucket is a
-    * distinct directory, so unread buckets cost zero IO). For MOR buckets
-    * with stacked deltas, base and deltas are reconciled by max-LSN
-    * (deletes win by tombstone) — Iceberg merge-on-read semantics. */
+    * distinct directory, so unread buckets cost zero IO; a filter on
+    * `bucket` prunes the same way). For MOR buckets with stacked deltas,
+    * base and deltas are reconciled by max-LSN (deletes win by tombstone)
+    * — Iceberg merge-on-read semantics. */
   def readBuckets(only: Option[Set[Int]]): DataFrame =
     readWith(effectiveManifest(), only)
 
@@ -287,87 +294,63 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     // time travel presents the table THROUGH the historical manifest: its
     // schema version, its bucket->dir mapping; the current path is the same
     // code with the effective (staged-inclusive) manifest
-    val schema = manifest match {
-      case Some(m) => DataType.fromJson(m.schemas(m.currentSchemaId.toString)).asInstanceOf[StructType]
-      case None    => Model.tableSchemaV0
-    }
+    val schema = schemaOf(manifest)
     manifest match {
       case None => emptyDf(schema)
       case Some(m) =>
         val wanted = m.buckets.toSeq
           .map { case (k, v) => (k.toInt, v) }
           .filter { case (b, _) => only.forall(_.contains(b)) }
-        if (wanted.isEmpty) emptyDf(schema)
+        val base = scan(m, wanted.collect { case (b, st) if st.dir.nonEmpty => (b, st.dir, st.schemaId) },
+          withBucket(schema), Seq.empty)
+        val deltaRefs = wanted.flatMap { case (b, st) => st.deltas.map(d => (b, d.dir, d.schemaId)) }
+        if (deltaRefs.isEmpty) base.getOrElse(emptyDf(schema))
         else {
-          // base: group by (snapshot dir, schema version): one scan per
-          // group, each read with ITS OWN written schema then cast up
-          val groups = wanted.filter(_._2.dir.nonEmpty)
-            .groupBy { case (_, st) => (st.dir, st.schemaId) }
-          val baseDfs = groups.toSeq.flatMap { case ((dir, sid), entries) =>
-            val written = DataType.fromJson(m.schemas(sid.toString)).asInstanceOf[StructType]
-            // a bucket whose rows were all deleted has a ledger entry but no
-            // files (partitionBy writes nothing for an empty partition)
-            val paths = entries.map { case (b, _) => s"$root/$dir/bucket=$b" }
-              .filter(p => fs.exists(new Path(p)))
-            if (paths.isEmpty) None
-            else {
-              val df = spark.read
-                .schema(written)
-                .option("basePath", s"$root/$dir")
-                .parquet(paths: _*)
-              Some(SchemaEvolution.alignTo(df, schema).withColumn("bucket", bucketCol))
-            }
-          }
-          val base = if (baseDfs.isEmpty) emptyDf(schema) else baseDfs.reduce(_ unionByName _)
-
-          val deltaRefs = wanted.flatMap { case (b, st) => st.deltas.map(d => (d, b)) }
-          if (deltaRefs.isEmpty) base
-          else {
-            // reconcile: base rows lose to any delta row for the same key
-            // (base lsn = -1); per-key max-LSN winner decides, tombstones drop
-            val reconTarget = StructType(schema.fields ++ Seq(
-              org.apache.spark.sql.types.StructField("lsn", org.apache.spark.sql.types.LongType, true),
-              org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType, true)))
-            val baseR = base.drop("bucket")
-              .withColumn("lsn", lit(-1L)).withColumn("op", lit("r"))
-            val deltaDfs = deltaRefs.groupBy(_._1).toSeq.flatMap { case (dref, entries) =>
-              val tbl = DataType.fromJson(m.schemas(dref.schemaId.toString)).asInstanceOf[StructType]
-              val written = StructType(tbl.fields ++ Seq(
-                org.apache.spark.sql.types.StructField("lsn", org.apache.spark.sql.types.LongType, true),
-                org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType, true)))
-              val paths = entries.map { case (_, b) => s"$root/${dref.dir}/bucket=$b" }
-                .filter(p => fs.exists(new Path(p)))
-              if (paths.isEmpty) None
-              else Some(SchemaEvolution.alignTo(
-                spark.read.schema(written).option("basePath", s"$root/${dref.dir}").parquet(paths: _*),
-                reconTarget))
-            }
-            val all = (SchemaEvolution.alignTo(baseR, reconTarget) +: deltaDfs)
-              .reduce(_ unionByName _)
-            Dedup.lastPerKey(all, Model.keyCols, "lsn")
-              .filter(col("op") =!= "d")
-              .drop("lsn", "op")
-              .withColumn("bucket", bucketCol)
-          }
+          // reconcile: base rows lose to any delta row for the same key
+          // (base lsn = -1); per-key max-LSN winner decides, tombstones drop
+          val reconTarget = StructType(withBucket(schema).fields ++ lsnOp)
+          val baseR = base.map(_.withColumn("lsn", lit(-1L)).withColumn("op", lit("r")))
+          val deltas = scan(m, deltaRefs, reconTarget, lsnOp)
+          Dedup.lastPerKey((baseR ++ deltas).reduce(_ unionByName _), Model.keyCols, "lsn")
+            .filter(col("op") =!= "d")
+            .drop("lsn", "op")
         }
     }
   }
 
+  /** Scan of `(bucket, dir, schemaId)` parts, planned from the manifest (no
+    * Spark listing job, see [[ManifestFileIndex]]): one relation per written
+    * schema version, whose files hold that version's columns plus `extra`,
+    * aligned to `target`. `bucket` is each part's partition value. None when
+    * there are no parts. */
+  private def scan(m: Manifest, parts: Seq[(Int, String, Int)], target: StructType,
+                   extra: Seq[StructField]): Option[DataFrame] =
+    parts.groupBy(_._3).toSeq.sortBy(_._1).map { case (sid, ps) =>
+      val index = new ManifestFileIndex(hconf,
+        ps.map { case (b, dir, _) => b -> new Path(root, s"$dir/bucket=$b") })
+      val written = StructType(schemaOf(m, sid).fields ++ extra)
+      val relation = HadoopFsRelation(index, index.partitionSchema, written, None,
+        new ParquetFileFormat, Map.empty)(spark)
+      SchemaEvolution.alignTo(spark.baseRelationToDataFrame(relation), target)
+    }.reduceOption(_ unionByName _)
+
   private def emptyDf(schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .withColumn("bucket", bucketCol)
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withBucket(schema))
 
   /** Writer repartition with sub-bucket fan-out: partition on
-    * (bucket, pmod(hash(key), fanout)) so every bucket spreads over `fanout`
-    * writer tasks. Plain repartition(n, bucket) hash-collides bucket ids
-    * (~1/e of tasks idle, some doubled) and caps each bucket at ONE task —
-    * at 100 TB / 64 buckets that is a ~1.5 TB single-task write. */
+    * (bucket, pmod(xxhash64(key), fanout)) so every bucket spreads over
+    * `fanout` writer tasks. Plain repartition(n, bucket) hash-collides bucket
+    * ids (~1/e of tasks idle, some doubled) and caps each bucket at ONE task —
+    * at 100 TB / 64 buckets that is a ~1.5 TB single-task write. The sub-bucket
+    * hash must differ from the bucket's own `hash`: with the same one, whenever
+    * fanout and numBuckets share a factor (64 buckets, fanout 2) a bucket's
+    * keys all fall into the same sub-bucket and the fan-out does nothing. */
   private def writerPartitioned(df: DataFrame, touchedBuckets: Int): DataFrame = {
     val fanout =
       if (filesPerBucket > 0) filesPerBucket
       else math.max(1, 2 * spark.sparkContext.defaultParallelism / math.max(1, touchedBuckets))
     df.repartition(math.max(1, touchedBuckets * fanout), col("bucket"),
-      pmod(hash(Model.keyCols.map(col): _*), lit(fanout)))
+      pmod(xxhash64(Model.keyCols.map(col): _*), lit(fanout)))
   }
 
   // ---- merge (the exactly-once upsert/delete sink) ------------------------
@@ -389,11 +372,13 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
    */
   def merge(delta: DataFrame, epochId: Long, broadcastThresholdBytes: Long = 256L << 20,
             commit: Boolean = true, deltaCache: String = "mem"): MergeResult = {
+    // one manifest snapshot for the whole merge: the fence check, the
+    // schema and the survivor read all see the same commit
     val prev = effectiveManifest()
     if (prev.exists(_.containsEpoch(epochId)))
       return MergeResult(epochId, applied = false, Seq.empty)
 
-    val tableSchema = currentSchema()
+    val tableSchema = schemaOf(prev)
     val eventDataSchema = StructType(delta.schema.fields
       .filter(f => !Set("lsn", "op", "schemaId", "ts_ms", "bucket", "_salt").contains(f.name)))
     val mergedSchema = SchemaEvolution.merge(tableSchema, eventDataSchema)
@@ -465,11 +450,8 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
         // merge-on-read: append ONLY the deduped delta (with lsn + op
         // tombstones); no base read, no join — O(|delta|) write per epoch.
         // Readers reconcile; compaction amortizes read amplification.
-        val reconTarget = StructType(mergedSchema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("lsn", org.apache.spark.sql.types.LongType, true),
-          org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType, true)))
         withRollover(writerPartitioned(
-            SchemaEvolution.alignTo(deltaWithOp, reconTarget).withColumn("bucket", bucketCol),
+            SchemaEvolution.alignTo(deltaWithOp, StructType(withBucket(mergedSchema).fields ++ lsnOp)),
             toMerge.size)
           .write.mode("overwrite"))
           .partitionBy("bucket")
@@ -479,17 +461,14 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
         // The surviving-rows side is current LEFT ANTI JOIN delta keys —
         // with a small delta the key set broadcasts and the snapshot side
         // never shuffles.
-        val current = SchemaEvolution.alignTo(readBuckets(Some(toMerge)), mergedSchema)
-          .withColumn("bucket", bucketCol)
+        val current = SchemaEvolution.alignTo(readWith(prev, Some(toMerge)), withBucket(mergedSchema))
         val keys = deltaWithOp.select(Model.keyCols.map(col): _*)
         val keysMaybeBroadcast =
           if (deltaKeyBytes <= broadcastThresholdBytes) broadcast(keys) else keys
         val survivors = current.join(keysMaybeBroadcast, Model.keyCols, "left_anti")
         val upserts = SchemaEvolution.alignTo(
-            deltaWithOp.filter(col("op") =!= "d"), mergedSchema)
-          .withColumn("bucket", bucketCol)
-        val out = survivors.select((mergedSchema.fieldNames.toSeq :+ "bucket").map(col): _*)
-          .unionByName(upserts.select((mergedSchema.fieldNames.toSeq :+ "bucket").map(col): _*))
+          deltaWithOp.filter(col("op") =!= "d"), withBucket(mergedSchema))
+        val out = survivors.unionByName(upserts)
         withRollover(writerPartitioned(out, toMerge.size).write.mode("overwrite"))
           .partitionBy("bucket")
           .parquet(s"$root/$snapDir")
@@ -565,7 +544,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     if (targets.isEmpty) return
     val bucketSet = targets.map(_._1).toSet
     val compDir = s"data/compact-${m.version + 1}"
-    withRollover(writerPartitioned(readBuckets(Some(bucketSet)), bucketSet.size)
+    withRollover(writerPartitioned(readWith(Some(m), Some(bucketSet)), bucketSet.size)
       .write.mode("overwrite"))
       .partitionBy("bucket")
       .parquet(s"$root/$compDir")
@@ -610,6 +589,20 @@ object SnapshotTable {
     m.registerModule(DefaultScalaModule)
     m
   }
+
+  private def schemaOf(m: Manifest, schemaId: Int): StructType =
+    DataType.fromJson(m.schemas(schemaId.toString)).asInstanceOf[StructType]
+
+  /** The table schema a manifest presents (v0 for a table with none yet). */
+  private def schemaOf(m: Option[Manifest]): StructType =
+    m.fold(Model.tableSchemaV0)(m => schemaOf(m, m.currentSchemaId))
+
+  private def withBucket(schema: StructType): StructType =
+    StructType(schema.fields :+ StructField("bucket", IntegerType, nullable = true))
+
+  /** Columns a merge-on-read delta stores after the table columns. */
+  private val lsnOp = Seq(StructField("lsn", LongType, nullable = true),
+    StructField("op", StringType, nullable = true))
 
   /** A stacked merge-on-read delta file set for one bucket. */
   case class DeltaRef(dir: String, schemaId: Int)

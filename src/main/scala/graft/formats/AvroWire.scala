@@ -405,9 +405,10 @@ object AvroWire {
     val target = registry(targetSchemaId)
     val dec = ExprColumnBridge.column(AvroDecodeExpr(
       ExprColumnBridge.expression(col("wire")), registry, targetSchemaId, framing))
-    df.select(keep.map(col) :+ dec.as("_dec"): _*)
+    val alias = WireFormat.freshAlias("_dec", keep)
+    df.select(keep.map(col) :+ dec.as(alias): _*)
       .select(keep.map(col) ++
-        target.fieldNames.toSeq.map(n => col("_dec")(n).as(n)): _*)
+        target.fieldNames.toSeq.map(n => col(alias)(n).as(n)): _*)
   }
 
   /** Registry-framed Avro encode of a payload struct as a Catalyst

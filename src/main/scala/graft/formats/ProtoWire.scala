@@ -334,9 +334,10 @@ object ProtoWire {
     val target = registry(targetSchemaId)
     val dec = ExprColumnBridge.column(ProtoDecodeExpr(
       ExprColumnBridge.expression(col("wire")), registry, targetSchemaId, framing))
-    df.select(keep.map(col) :+ dec.as("_dec"): _*)
+    val alias = WireFormat.freshAlias("_dec", keep)
+    df.select(keep.map(col) :+ dec.as(alias): _*)
       .select(keep.map(col) ++
-        target.fieldNames.toSeq.map(n => col("_dec")(n).as(n)): _*)
+        target.fieldNames.toSeq.map(n => col(alias)(n).as(n)): _*)
   }
 
   /** Registry-framed proto3 encode of a payload struct as a Catalyst

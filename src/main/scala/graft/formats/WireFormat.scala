@@ -269,9 +269,16 @@ object WireFormat {
         "schemas.enable decode: no embedded schema block found and no registry fallback"))
     val env = StructType(Seq(
       org.apache.spark.sql.types.StructField("payload", target)))
-    df.select(keep.map(col) :+ from_json(col("wire"), env).as("_e"): _*)
-      .select(keep.map(col) ++ target.fieldNames.map(n => col(s"_e.payload.$n")): _*)
+    val alias = freshAlias("_e", keep)
+    df.select(keep.map(col) :+ from_json(col("wire"), env).as(alias): _*)
+      .select(keep.map(col) ++ target.fieldNames.map(n => col(alias)("payload")(n).as(n)): _*)
   }
+
+  /** Name for a decode's intermediate struct column that no `keep` column
+    * has (column names resolve case-insensitively), so a kept column is
+    * never shadowed by the struct or vice versa. */
+  private[formats] def freshAlias(base: String, keep: Seq[String]): String =
+    Iterator.iterate(base)("_" + _).find(n => !keep.exists(_.equalsIgnoreCase(n))).get
 
   /** Deserialize a `wire` column back to flat payload columns. */
   def decode(df: DataFrame, format: String, registry: Map[Int, StructType],
@@ -282,14 +289,16 @@ object WireFormat {
       decodeEmbedded(df, keep, registry.get(schemaId))
     case Json =>
       val target = registry(schemaId)
-      df.select(keep.map(col) :+ from_json(col("wire"), target).as("_p"): _*)
-        .select(keep.map(col) ++ target.fieldNames.map(n => col(s"_p.$n")): _*)
+      val alias = freshAlias("_p", keep)
+      df.select(keep.map(col) :+ from_json(col("wire"), target).as(alias): _*)
+        .select(keep.map(col) ++ target.fieldNames.map(n => col(alias)(n).as(n)): _*)
     case CloudEvents =>
       val target = registry(schemaId)
       val env = StructType(Seq(
         org.apache.spark.sql.types.StructField("data", target)))
-      df.select(keep.map(col) :+ from_json(col("wire"), env).as("_e"): _*)
-        .select(keep.map(col) ++ target.fieldNames.map(n => col(s"_e.data.$n")): _*)
+      val alias = freshAlias("_e", keep)
+      df.select(keep.map(col) :+ from_json(col("wire"), env).as(alias): _*)
+        .select(keep.map(col) ++ target.fieldNames.map(n => col(alias)("data")(n).as(n)): _*)
     case Avro  => AvroWire.decode(df, registry, schemaId, keep, framing)
     case Proto => ProtoWire.decode(df, registry, schemaId, keep, framing)
     case other => throw new IllegalArgumentException(s"unknown wire format $other")

@@ -31,6 +31,23 @@ class WireFormatSpec extends SparkTestBase {
   test("json round trip")(roundtrip(WireFormat.Json))
   test("cloudevents round trip")(roundtrip(WireFormat.CloudEvents))
 
+  test("kept columns named like a decode's intermediate struct round-trip unchanged") {
+    val ev = events.withColumn("_dec", col("lsn") * 2).withColumn("_P", col("lsn") + 1)
+      .withColumn("_e", concat(col("repo"), lit("!")))
+    val keep = Seq("lsn", "_dec", "_P", "_e")
+    val pt = payloadType(ev)
+    for ((format, embedded) <- Seq(WireFormat.Avro, WireFormat.Proto, WireFormat.Json,
+        WireFormat.CloudEvents).map(_ -> false) :+ (WireFormat.Json -> true)) {
+      val wire = WireFormat.encode(ev, format, payloadCols, 0, keep = keep, schemasEnable = embedded)
+      val back = WireFormat.decode(wire, format, Map(0 -> pt), 0, keep = keep,
+        schemasEnable = embedded)
+      assert(back.columns.toSeq == keep ++ payloadCols, s"$format columns")
+      val want = ev.select(keep.head, keep.tail ++ payloadCols: _*)
+      assert(back.exceptAll(want).isEmpty && want.exceptAll(back).isEmpty,
+        s"$format round trip with kept _dec/_P/_e columns must be the identity")
+    }
+  }
+
   test("wire headers carry the schema id; magic bytes differ per format") {
     val ev = events.limit(10)
     val a = AvroWire.encode(ev, payloadCols, 7).select("wire").as[Array[Byte]].head()
