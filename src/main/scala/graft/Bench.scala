@@ -26,16 +26,10 @@ import graft.cdc.{CdcEngine, EngineConfig, EventGen, GenConfig, SnapshotTable}
 object Bench {
 
   private def session(cpus: String, shuffle: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
+    val s = GraftSession.builder(s"local[$cpus]", s"graft-bench-$cpus")
       .config("spark.local.dir",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local"))
       .config("spark.sql.shuffle.partitions", shuffle.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -52,10 +46,12 @@ object Bench {
     // shifts GC-thread allocation differently per level (measured: +16% on
     // the 1-core level, -15% on 4-core in the same window) and makes the
     // ratio measure JVM-GC sizing instead of pipeline scaling.
-    val cmd = Seq(javaBin, "-Xmx32g") ++
-      jdk17AddOpens ++
-      Seq("-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", System.getProperty("java.class.path"),
+    // the module opens spark-submit starts a driver with, from the Spark
+    // distribution in use
+    val addOpens = org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray()
+      .filter(_.startsWith("--add-opens")).toSeq
+    val cmd = Seq(javaBin, "-Xmx32g") ++ addOpens ++
+      Seq("-cp", System.getProperty("java.class.path"),
         "graft.BenchReplay", cpus.toString, numEvents.toString, mode)
     val out = new StringBuilder
     val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
@@ -127,15 +123,6 @@ object Bench {
     ts.foreach(_.start()); Thread.sleep(probeMs); stop.set(true); ts.foreach(_.join())
     count.get() / ((System.nanoTime() - t0) / 1e9)
   }
-
-  private val jdk17AddOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-    "java.base/java.io", "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic", "java.base/sun.nio.ch",
-    "java.base/sun.nio.cs", "java.base/sun.security.action",
-    "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

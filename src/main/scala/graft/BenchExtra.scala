@@ -68,15 +68,10 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = if (args.length > 1 && args(1).nonEmpty) Some(args(1).split(",").toSet) else None
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
+    val spark = GraftSession.builder(s"local[$cpus]", "graft-bench-extra")
       .config("spark.local.dir",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local"))
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count() // warmup

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.cdc.{CdcEngine, EngineConfig, GenConfig, SnapshotTable}
 
 /**
@@ -20,16 +19,10 @@ object BenchReplay {
     val numEvents = args(1).toLong
     val mode = if (args.length > 2) args(2) else "cow"
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-replay-$cores")
+    val spark = GraftSession.builder(s"local[$cores]", s"graft-bench-replay-$cores")
       .config("spark.local.dir",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local"))
       .config("spark.sql.shuffle.partitions", (cores * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -48,8 +41,7 @@ object BenchReplay {
     // knob below lets a hand run measure either plan.
     val bcast = sys.env.get("SPARK_GRAFT_BCAST").map(_.toLong).getOrElse(0L)
     val engine = new CdcEngine(spark, table,
-      EngineConfig(numBuckets = 64, broadcastThresholdBytes = bcast,
-        deltaCache = sys.env.getOrElse("SPARK_GRAFT_DELTA_CACHE", "mem")))
+      EngineConfig(numBuckets = 64, broadcastThresholdBytes = bcast))
     val t0 = System.nanoTime()
     engine.replayGenerated(0, numEvents, epochs = 2, gen)
     val secs = (System.nanoTime() - t0) / 1e9

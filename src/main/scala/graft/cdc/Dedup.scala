@@ -20,16 +20,14 @@ import org.apache.spark.sql.functions._
  *    BEFORE the shuffle, which is exactly the skew defense the north rule
  *    asks for, with no sort at all. This is the engine's hot path.
  *
- *  - [[lastPerKeyWindow]]: `row_number() over (partition by keys order by
- *    lsn desc) = 1`. Needs a full shuffle + per-key sort; kept because it is
- *    directly SQL-expressible for the DuckDB oracle and as a cross-check.
- *
  *  - [[saltedLastPerKey]]: explicit two-phase variant with a salt column in
  *    the physical grouping key (north rule N5). With max_by the partial agg
  *    already de-skews, so this exists for the case where the input arrives
  *    pre-partitioned so badly that even map-side partials overflow one task
  *    (e.g. one parquet file holding one hot key) — and as the explicit
  *    demonstration the rule requires.
+ *
+ * DedupSpec cross-checks both against a `row_number()` window formulation.
  */
 object Dedup {
 
@@ -41,16 +39,6 @@ object Dedup {
     df.groupBy(keyCols.map(col): _*)
       .agg(max_by(packed, col(ordCol)).as("_last"))
       .selectExpr(keyCols ++ Seq("_last.*"): _*)
-  }
-
-  /** Window-function variant: identical result when `ordCol` is unique per
-    * key (the generator guarantees LSN uniqueness). */
-  def lastPerKeyWindow(df: DataFrame, keyCols: Seq[String], ordCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(ordCol).desc)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
   }
 
   /** Explicit salted two-phase max-LSN reduction: phase 1 groups by

@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
  *   events(epoch) -> per-key max-LSN dedup -> schema align -> MERGE into
  *   snapshot table -> lineage append -> (manifest rename = offset commit)
  *
- * One epoch == one micro-batch == one offset-commit unit. Exactly-once comes
- * from the table's (bucket, epochId) fencing; resume comes from the manifest
- * ledger (skip committed epochs entirely — the analogue of the reference's
- * offset restore skipping `id <= lastId`,
- * SimpleSourceConnector.java:143-157).
+ * One epoch == one micro-batch == one offset-commit unit, and every apply
+ * path ends in the same commit step (`commitEpoch`). Exactly-once comes from
+ * the table's (bucket, epochId) fencing; resume comes from the manifest
+ * ledger: `merge` checks it before any Spark job, so a committed epoch is
+ * skipped entirely — the analogue of the reference's offset restore
+ * skipping `id <= lastId`, SimpleSourceConnector.java:143-157.
  *
  * Scale notes (10^10 events / 1000 executors):
  *  - the raw stream is never materialized: each epoch's events are generated
@@ -34,11 +35,6 @@ final case class EngineConfig(
     // offset-flush cadence (reference OffsetCommitPolicy.java:30-93);
     // Always = manifest rename per epoch (perf-run default in the reference)
     commitPolicy: CommitPolicy = CommitPolicy.Always,
-    // late materialization for sources that support re-read-by-LSN (all
-    // binlog/WAL sources do): dedup shuffles only (repo, path, lsn), the
-    // winner payloads are re-fetched from the source afterwards — ~6x less
-    // shuffle volume than shuffling full after-images
-    lateMaterialize: Boolean = true,
     // A1 Roller / flush.records equivalent: caps parquet file size on the
     // snapshot write (reference StorageSinkConnectorConfig.java:31-38)
     maxRecordsPerFile: Long = 0L,
@@ -56,12 +52,7 @@ final case class EngineConfig(
     // registry-header framing for the binary formats (reference selects
     // Confluent- vs Apicurio-protocol converter classes,
     // ConvertingEngineBuilder.java:198-234): "confluent" | "apicurio"
-    registryFraming: String = graft.formats.RegistryFraming.Confluent,
-    // delta cache policy for the merge's three passes over one epoch's
-    // delta: "mem" (deserialized rows) | "ser" (serialized blocks) |
-    // "none" (recompute per pass from the delta's lineage — zero executor
-    // memory footprint; right when the source re-reads by offset cheaply)
-    deltaCache: String = "mem"
+    registryFraming: String = graft.formats.RegistryFraming.Confluent
 )
 
 class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfig = EngineConfig()) {
@@ -87,27 +78,29 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
 
   /** Apply one epoch of raw (possibly duplicated / out-of-order) events.
     * Returns the number of rows applied, or -1 if the epoch was fenced. */
-  def applyEpoch(events: DataFrame, epochId: Long): Long = {
-    if (table.isCommitted(epochId)) return -1L
-
-    val deduped =
+  def applyEpoch(events: DataFrame, epochId: Long): Long =
+    commitEpoch(
       if (conf.saltBuckets > 0)
         Dedup.saltedLastPerKey(events, Model.keyCols, "lsn", conf.saltBuckets)
-      else
-        Dedup.lastPerKey(events, Model.keyCols, "lsn")
+      else Dedup.lastPerKey(events, Model.keyCols, "lsn"),
+      epochId)
 
-    // merge computes per-bucket stats in a single pass and writes the
-    // lineage rows itself (just before the manifest commit). The commit
-    // policy decides whether this epoch's manifest rename happens now
-    // (offset flush) or is deferred (reference maybeFlush/commitOffsets,
-    // MTEngine.java:1080-1138).
+  /** The one commit step of every apply path: MERGE the one-row-per-key
+    * delta and let the commit policy decide whether this epoch's manifest
+    * rename happens now (offset flush) or is deferred (reference
+    * maybeFlush/commitOffsets, MTEngine.java:1080-1138). `merge` fences on
+    * the manifest before it runs any Spark action and `delta` is lazy, so a
+    * re-delivered epoch starts no job; it also leaves the policy counters
+    * alone, as nothing was staged. Returns the rows applied, or -1 if
+    * fenced. */
+  private def commitEpoch(delta: DataFrame, epochId: Long): Long = {
     val doCommit = conf.commitPolicy.performCommit(
       epochsSinceCommit + 1, System.currentTimeMillis() - lastCommitMs)
-    val res = table.merge(deduped, epochId, conf.broadcastThresholdBytes, commit = doCommit,
-      deltaCache = conf.deltaCache)
+    val res = table.merge(delta, epochId, conf.broadcastThresholdBytes, commit = doCommit)
+    if (!res.applied) return -1L
     if (doCommit) { epochsSinceCommit = 0; lastCommitMs = System.currentTimeMillis() }
     else epochsSinceCommit += 1
-    if (res.applied) res.stats.map(_.rows).sum else -1L
+    res.stats.map(_.rows).sum
   }
 
   /** S4 retriable-error retry (reference: a RetriableException from poll is
@@ -153,20 +146,11 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
     * input is already one-row-per-key, so no second dedup happens. */
   def applyEpochLateMat(lo: Long, hi: Long, epochId: Long, gen: GenConfig,
                         schemaId: Int = 0): Long = {
-    if (table.isCommitted(epochId)) return -1L
     // phase 1 on the pure-numeric (key, lsn) skeleton: no string allocation,
     // 16-byte shuffle rows, primitive-typed max aggregation
     val winners = EventGen.keySkeleton(spark, lo, hi, gen)
       .groupBy(col("key")).agg(max(col("lsn")).as("lsn"))
-    val delta = EventGen.eventsFromLsns(winners.select("lsn"), gen, schemaId)
-
-    val doCommit = conf.commitPolicy.performCommit(
-      epochsSinceCommit + 1, System.currentTimeMillis() - lastCommitMs)
-    val res = table.merge(delta, epochId, conf.broadcastThresholdBytes, commit = doCommit,
-      deltaCache = conf.deltaCache)
-    if (doCommit) { epochsSinceCommit = 0; lastCommitMs = System.currentTimeMillis() }
-    else epochsSinceCommit += 1
-    if (res.applied) res.stats.map(_.rows).sum else -1L
+    commitEpoch(EventGen.eventsFromLsns(winners.select("lsn"), gen, schemaId), epochId)
   }
 
   // ---- ad-hoc incremental snapshot (reference S7) --------------------------
@@ -317,7 +301,10 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
   }
 
   /** Replay generated events for lsn in [lo, hi) in `epochs` equal chunks,
-    * resuming past already-committed epochs. Queued snapshot signals
+    * resuming past already-committed epochs. The generator re-reads by LSN,
+    * so every epoch takes the late-materialized path: its dedup shuffles
+    * ~6x less than one over full after-images (`applyEpoch`, kept for
+    * sources that cannot re-read by LSN). Queued snapshot signals
     * activate at the next epoch boundary and interleave one chunk per
     * stream epoch (remaining chunks drain at the end). */
   def replayGenerated(lo: Long, hi: Long, epochs: Int, gen: GenConfig = GenConfig()): ReplayStats = {
@@ -333,9 +320,7 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
       // partial/resumed runs over different [lo, hi) windows of the same
       // stream, so fencing lines up with WHAT was applied, not when
       val epochId = cursor / chunk
-      val n =
-        if (conf.lateMaterialize) applyEpochLateMat(cursor, end, epochId, gen)
-        else applyEpoch(EventGen.events(spark, cursor, end, gen), epochId)
+      val n = applyEpochLateMat(cursor, end, epochId, gen)
       if (n < 0) skipped += 1 else applied += n
       if (n < 0) assertResumeChunkingMatches(epochId, end)
       cursor = end

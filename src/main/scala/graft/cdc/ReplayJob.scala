@@ -1,6 +1,5 @@
 package graft.cdc
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,9 +24,7 @@ object ReplayJob {
     val numKeys   = if (args.length > 4) args(4).toLong else 100_000L
     val master    = if (args.length > 5) args(5) else sys.env.getOrElse("SPARK_MASTER", "local[8]")
 
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .appName("graft-cdc-replay")
+    val builder0 = graft.GraftSession.builder(master, "graft-cdc-replay")
       .config("spark.local.dir",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/tmp"))
     // extra session confs: SPARK_GRAFT_CONF="k=v;k2=v2"
@@ -38,10 +35,6 @@ object ReplayJob {
       }
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -56,8 +49,7 @@ object ReplayJob {
     // the job's explicit args/knobs override on top
     val base = ServerConfig.engineConfig(ServerConfig.propsFromEnv(sys.env))
     val engine = new CdcEngine(spark, table,
-      base.copy(numBuckets = buckets, broadcastThresholdBytes = bcast,
-        lateMaterialize = !sys.env.get("SPARK_GRAFT_LATEMAT").contains("0")))
+      base.copy(numBuckets = buckets, broadcastThresholdBytes = bcast))
 
     val t0 = System.nanoTime()
     val stats = engine.replayGenerated(0, numEvents, epochs, gen)

@@ -42,14 +42,12 @@ object ServerConfig {
           .map(CommitPolicy.everyNEpochs).getOrElse(d.commitPolicy)
         case Some(ms) => CommitPolicy.periodic(ms)
       },
-      lateMaterialize = p("late.materialize").map(_.toBoolean).getOrElse(d.lateMaterialize),
       maxRecordsPerFile = p("max.records.per.file").map(_.toLong).getOrElse(d.maxRecordsPerFile),
       format = p("format.value").getOrElse(d.format),
       keyFormat = p("format.key").getOrElse(d.keyFormat),
       schemasEnable = p("schemas.enable").map(_.toBoolean).getOrElse(d.schemasEnable),
       wireCompression = p("wire.compression").getOrElse(d.wireCompression),
-      registryFraming = p("registry.framing").getOrElse(d.registryFraming),
-      deltaCache = p("delta.cache").getOrElse(d.deltaCache))
+      registryFraming = p("registry.framing").getOrElse(d.registryFraming))
   }
 
   /**

@@ -366,12 +366,13 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
    * This beats a full-outer join (which would shuffle both sides) and is the
    * scale-critical choice.
    *
-   * Returns per-bucket merge stats. Idempotent: buckets whose ledger entry
-   * already covers `epochId` are skipped; re-running a committed epoch is a
-   * no-op (fencing on (bucket, epochId)).
+   * Returns per-bucket merge stats. Idempotent: the fence runs first, so a
+   * re-delivered committed (or staged) epoch returns `applied = false`
+   * before any Spark job starts; buckets whose ledger entry already records
+   * `epochId` are skipped (fencing on (bucket, epochId)).
    */
   def merge(delta: DataFrame, epochId: Long, broadcastThresholdBytes: Long = 256L << 20,
-            commit: Boolean = true, deltaCache: String = "mem"): MergeResult = {
+            commit: Boolean = true): MergeResult = {
     // one manifest snapshot for the whole merge: the fence check, the
     // schema and the survivor read all see the same commit
     val prev = effectiveManifest()
@@ -385,21 +386,9 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     val schemaChanged = mergedSchema != tableSchema
 
     val keyed = delta.withColumn("bucket", bucketCol)
-    // the delta feeds three passes (stats, anti-join keys, upserts). Cache
-    // policy is the engine's call: "mem" caches deserialized rows (fewest
-    // recomputes, most heap+bandwidth), "ser" caches serialized blocks
-    // (compact, per-pass decode CPU), "none" recomputes each pass from the
-    // delta's own lineage — for a deterministic re-readable source (binlog
-    // by offset) the post-shuffle recompute trades CPU for memory traffic,
-    // the right direction on bandwidth-starved hosts and the only option
-    // that adds ZERO executor-memory footprint at 100 TB scale.
-    val level = deltaCache match {
-      case "mem"  => Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case "ser"  => Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      case "none" => None
-      case other => throw new IllegalArgumentException(s"unknown deltaCache '$other'")
-    }
-    level.foreach(keyed.persist)
+    // the delta feeds three passes (stats, anti-join keys, upserts): cache
+    // it once (deserialized, spilling to disk under memory pressure)
+    keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // ONE action computes everything the driver needs: affected buckets,
       // delta size (broadcast decision), fencing inputs, lineage rows and
@@ -518,7 +507,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
       if (commit) commitPending()
       if (mode == "mor" && commit) compactIfNeeded()
       MergeResult(epochId, applied = true, mergedStats)
-    } finally if (level.nonEmpty) keyed.unpersist()
+    } finally keyed.unpersist()
   }
 
   /** Compact buckets whose stacked delta count exceeds the threshold:

@@ -47,6 +47,21 @@ class CommitPolicySpec extends SparkTestBase {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
+  test("a fenced re-delivery leaves the commit-policy counters alone") {
+    val table = new SnapshotTable(spark, tmpDir("policy-fence"), 4)
+    val engine = new CdcEngine(spark, table,
+      EngineConfig(numBuckets = 4, commitPolicy = CommitPolicy.everyNEpochs(2)))
+    assert(engine.applyEpoch(EventGen.events(spark, 0, 5000, gen), 0L) > 0)
+    // the staged epoch 0 fences its re-delivery; that must not count as an
+    // epoch towards the policy, nor reset it as a commit would
+    assert(engine.applyEpoch(EventGen.events(spark, 0, 5000, gen), 0L) == -1L)
+    assert(table.loadManifest().isEmpty && table.hasPending)
+    engine.applyEpoch(EventGen.events(spark, 5000, 10000, gen), 1L)
+    val m = table.loadManifest()
+    assert(m.exists(_.epochWatermark == 1L) && !table.hasPending,
+      "the second applied epoch must commit under everyNEpochs(2)")
+  }
+
   test("crash before flush loses only staged epochs; replay converges") {
     val root = tmpDir("policy2")
     val t1 = new SnapshotTable(spark, root, 4)

@@ -23,10 +23,22 @@ class DedupSpec extends SparkTestBase {
     assert(got == Set(("r1", "a", 5L, "u", "v5"), ("r2", "b", 4L, "d", null)))
   }
 
+  /** Window-function cross-check: `row_number() over (partition by keys
+    * order by lsn desc) = 1`, the SQL-expressible formulation. It needs a
+    * full shuffle + per-key sort, so the engine uses `Dedup.lastPerKey`; the
+    * two agree when `ordCol` is unique per key (the generator guarantees
+    * LSN uniqueness). */
+  private def lastPerKeyWindow(df: org.apache.spark.sql.DataFrame, keyCols: Seq[String],
+                               ordCol: String): org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keyCols.map(col): _*).orderBy(col(ordCol).desc)
+    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
+  }
+
   test("all three variants agree on generated events") {
     val events = EventGen.events(spark, 0, 20000, GenConfig(numKeys = 500, hotKeys = 8))
     val a = Dedup.lastPerKey(events, Model.keyCols, "lsn")
-    val b = Dedup.lastPerKeyWindow(events, Model.keyCols, "lsn")
+    val b = lastPerKeyWindow(events, Model.keyCols, "lsn")
     val c = Dedup.saltedLastPerKey(events, Model.keyCols, "lsn", salts = 16)
     val cols = Seq("repo", "path", "lsn", "op", "commit", "lang", "content")
     def canon(df: org.apache.spark.sql.DataFrame) =

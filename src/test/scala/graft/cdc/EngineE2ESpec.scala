@@ -36,24 +36,6 @@ class EngineE2ESpec extends SparkTestBase {
     assert(rows > 0 && bytes > 0)
   }
 
-  test("delta-cache policies (mem/ser/none) produce identical final state") {
-    // "none" recomputes each merge pass from the delta's lineage — only
-    // sound because the generator (≡ a binlog re-read by offset) is
-    // deterministic; this is the policy's correctness gate
-    val tables = Seq("mem", "ser", "none").map { policy =>
-      val table = new SnapshotTable(spark, tmpDir(s"snap-$policy"), numBuckets = 8)
-      val engine = new CdcEngine(spark, table, EngineConfig(
-        numBuckets = 8, deltaCache = policy))
-      engine.replayGenerated(0, 30000, epochs = 3, gen)
-      table
-    }
-    tables.foreach(t => assertTableMatchesOracle(t, 0, 30000))
-    intercept[IllegalArgumentException] {
-      new SnapshotTable(spark, tmpDir("snap-bad"), numBuckets = 8)
-        .merge(EventGen.events(spark, 0, 10, gen), 0L, deltaCache = "bogus")
-    }
-  }
-
   test("re-applying a committed epoch is a fenced no-op") {
     val root = tmpDir("snap")
     val table = new SnapshotTable(spark, root, numBuckets = 8)
@@ -65,6 +47,24 @@ class EngineE2ESpec extends SparkTestBase {
     val n = engine.applyEpoch(ev, 2L)
     assert(n == -1L, "fenced epoch must be a no-op")
     assert(table.loadManifest().get.version == before.version, "manifest must not advance")
+    assertTableMatchesOracle(table, 0, 20000)
+  }
+
+  test("a re-delivered epoch is fenced before any Spark job on both apply paths") {
+    val table = new SnapshotTable(spark, tmpDir("snap"), numBuckets = 8)
+    val engine = new CdcEngine(spark, table)
+    engine.replayGenerated(0, 20000, epochs = 4, gen)
+    val version = table.loadManifest().get.version
+    val redeliveries = Seq[(String, () => Long)](
+      "applyEpochLateMat" -> (() => engine.applyEpochLateMat(10000, 15000, 2L, gen)),
+      "applyEpoch" -> (() => engine.applyEpoch(EventGen.events(spark, 10000, 15000, gen), 2L)))
+    redeliveries.foreach { case (path, apply) =>
+      var n = 0L
+      val jobs = jobsDuring { n = apply() }
+      assert(n == -1L, s"$path: fenced epoch must be a no-op")
+      assert(jobs == 0, s"$path: a fenced epoch started $jobs Spark jobs")
+      assert(table.loadManifest().get.version == version, s"$path: manifest must not advance")
+    }
     assertTableMatchesOracle(table, 0, 20000)
   }
 
@@ -127,13 +127,14 @@ class EngineE2ESpec extends SparkTestBase {
   }
 
   test("late materialization and full-shuffle dedup produce identical tables") {
-    val r1 = tmpDir("lm1"); val r2 = tmpDir("lm2")
-    val late = new CdcEngine(spark, new SnapshotTable(spark, r1, 8),
-      EngineConfig(numBuckets = 8, lateMaterialize = true))
-    val full = new CdcEngine(spark, new SnapshotTable(spark, r2, 8),
-      EngineConfig(numBuckets = 8, lateMaterialize = false))
+    val late = new CdcEngine(spark, new SnapshotTable(spark, tmpDir("lm1"), 8))
+    val full = new CdcEngine(spark, new SnapshotTable(spark, tmpDir("lm2"), 8))
     late.replayGenerated(0, 30000, 3, gen)
-    full.replayGenerated(0, 30000, 3, gen)
+    // the same three LSN chunks and epoch ids through the full-shuffle path
+    (0 until 3).foreach { i =>
+      full.applyEpoch(EventGen.events(spark, i * 10000L, (i + 1) * 10000L, gen), i.toLong)
+    }
+    full.flush()
     val a = digests(late.table.read())
     val b = digests(full.table.read())
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)

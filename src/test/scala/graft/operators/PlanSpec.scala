@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.SparkTestBase
 import graft.SparkEntry
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Physical-plan shape guards: these are the properties that decide whether
   * a query survives a 100x scale-up — filter pushdown into the parquet scan,
@@ -85,6 +87,45 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("zip_with"), s"interpreted HOF pair in hot path:\n$p")
     val pn = plan("emb_near_dup")
     assert(pn.contains("dot_q") && !pn.contains("zip_with"), s"emb_near_dup hot path:\n$pn")
+  }
+
+  /** The nodes from the root of `name`'s physical plan down to its global
+    * Sort (exclusive), and that Sort. Fails if the chain leaves single-child
+    * nodes before it reaches one. */
+  private def aboveGlobalSort(name: String): (Seq[SparkPlan], SortExec, SparkPlan) = {
+    def chain(p: SparkPlan): List[SparkPlan] =
+      p :: (p.children match { case Seq(only) => chain(only); case _ => Nil })
+    val root = SparkEntry.queries(name)(spark, dir).queryExecution.sparkPlan
+    val path = chain(root)
+    path.collectFirst { case s: SortExec if s.global => s } match {
+      case Some(sort) => (path.takeWhile(_ ne sort), sort, root)
+      case None => fail(s"$name: no global Sort on the single-child chain below the root:\n$root")
+    }
+  }
+
+  // sort-first queries: the total order is established on the slim rows and
+  // the expensive 1:1 projection runs above it, once per row (a trailing
+  // orderBy's range partitioner would sample its child and run it twice).
+  // This holds only while Project keeps its child's ordering and no rule
+  // drops the non-root Sort, so a Spark upgrade must keep these green.
+  Seq(
+    "cdc_roundtrip_avro" -> "AvroDecodeExpr",
+    "cdc_envelope_before" -> "JsonToStructs",
+    "doc_scrub" -> "RegExpReplace"
+  ).foreach { case (name, expensive) =>
+    test(s"$name: output order comes from a global Sort below the $expensive projection") {
+      val (above, sort, root) = aboveGlobalSort(name)
+      assert(!above.exists(_.isInstanceOf[Exchange]),
+        s"an Exchange sits between the Sort and the root:\n$root")
+      assert(above.exists {
+        case p: ProjectExec =>
+          p.projectList.exists(_.exists(_.getClass.getSimpleName == expensive))
+        case _ => false
+      }, s"no $expensive projection above the Sort:\n$root")
+      // only row-wise operators may sit above the Sort, or its order is lost
+      assert(above.forall(n => n.isInstanceOf[ProjectExec] || n.isInstanceOf[FilterExec]),
+        s"a non-row-wise operator sits above Sort ${sort.sortOrder}:\n$root")
+    }
   }
 
   test("minhash pipeline shuffles at most 3 times (doc agg, buckets, pair distinct)") {
