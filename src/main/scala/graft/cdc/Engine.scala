@@ -181,8 +181,6 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
 
   private def signalsDir = new Path(s"${table.root}/signals")
   private def signalPath(baseEpoch: Long) = new Path(signalsDir, s"signal-$baseEpoch.json")
-  private def signalsFs =
-    signalsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // restore still-pending signals from a previous (possibly crashed) run —
   // the signal-table semantics: issued once, survives restarts until done.
@@ -191,7 +189,7 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
   // could still produce) is QUARANTINED with a warning, never a constructor
   // throw — a bad signal row must not permanently block engine restart.
   locally {
-    val fs = signalsFs
+    val fs = table.fs
     if (fs.exists(signalsDir)) {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       fs.listStatus(signalsDir).map(_.getPath)
@@ -254,7 +252,7 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
     val json =
       s"""{"baseEpoch":$baseEpoch,"selectionSql":"$esc","numChunks":$numChunks}"""
     // persist FIRST (accepted signal == durable signal), then enqueue
-    val fs = signalsFs
+    val fs = table.fs
     val dst = signalPath(baseEpoch)
     val tmp = new Path(dst.getParent, dst.getName + ".tmp")
     val out = fs.create(tmp, true)
@@ -295,7 +293,7 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
       if (run.next >= run.req.numChunks) {
         activeSnapshot = None
         // last chunk applied -> retire the durable signal row
-        signalsFs.delete(signalPath(run.req.baseEpoch), false)
+        table.fs.delete(signalPath(run.req.baseEpoch), false)
       }
       true
   }

@@ -3,7 +3,7 @@ package graft.cdc
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -50,6 +50,14 @@ import java.nio.charset.StandardCharsets
  * from the manifest's bucket -> directory map through [[ManifestFileIndex]]:
  * one parquet relation per written schema version, the bucket id as the
  * `bucket` partition value, and no Spark job to discover the files.
+ *
+ * Writes: a bucket write's tasks are sized by bytes, not by bucket count —
+ * AQE coalesces the `(bucket, sub-bucket)` shuffle into about
+ * defaultParallelism tasks, each writing one file per bucket it holds, while
+ * a large bucket still spreads over several sub-buckets (see
+ * [[writerPartitioned]]). Every write under the root (bucket data, merge-on-
+ * read deltas, compaction, lineage, the manifest, signals, dead letters) goes
+ * through [[NoForkLocalFileSystem]] on `file:` paths, so none forks `chmod`.
  */
 /**
  * @param mode "cow" (copy-on-write: each epoch rewrites touched buckets —
@@ -59,10 +67,11 @@ import java.nio.charset.StandardCharsets
  *             — Iceberg's two write modes, rebuilt on parquet + manifest)
  */
 /**
- * @param filesPerBucket write fan-out: each touched bucket's rows spread over
- *        this many writer tasks (sub-bucketed by key hash) so one giant bucket
- *        is not a single-task write at scale; 0 = auto (2·defaultParallelism
- *        spread over the touched buckets, min 1)
+ * @param filesPerBucket write fan-out: each touched bucket's rows are
+ *        sub-bucketed by key hash into this many groups, which AQE may place
+ *        in different writer tasks, so one giant bucket is not a single-task
+ *        write at scale; 0 = auto (2·defaultParallelism spread over the
+ *        touched buckets, min 1)
  */
 class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: Int,
                     val mode: String = "cow", val compactionThreshold: Int = 8,
@@ -81,8 +90,10 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     * snappy on this content (90.1 vs 153.4 MB for the same table), and
     * write volume is what saturates first under parallel CoW epochs (an
     * uncompressed run collapsed the 4-core replay >2x); smaller objects
-    * are also the right trade against object-store throughput at scale. */
-  private def withRollover(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) = {
+    * are also the right trade against object-store throughput at scale.
+    * `w` comes from [[writer]] (its files never fork `chmod`) over
+    * [[writerPartitioned]] rows (AQE sizes its tasks by bytes). */
+  private def withRollover(w: DataFrameWriter[Row]) = {
     val c = w.option("compression", codec)
       // content/commit are unique-per-row high-entropy values: parquet's
       // dictionary attempt on them is guaranteed to fall back after burning
@@ -101,7 +112,20 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
   }
 
   private val hconf = spark.sparkContext.hadoopConfiguration
-  private def fs: FileSystem = new Path(root).getFileSystem(hconf)
+  /** The root's filesystem for driver-side writes (manifest, signals):
+    * [[NoForkLocalFileSystem]] on `file:`, the cached instance otherwise. */
+  private[cdc] val fs: FileSystem = new Path(root).getFileSystem(NoForkLocalFileSystem.conf(hconf))
+
+  /** `df.write` for a write under the root: `file:` paths go through
+    * [[NoForkLocalFileSystem]] for this write only, on driver and executors. */
+  private[cdc] def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(NoForkLocalFileSystem.hadoopKeys)
+
+  /** Overwrite `<root>/<dir>` with `df`'s rows as `bucket=<b>` directories. */
+  private def writeBuckets(df: DataFrame, touchedBuckets: Int, dir: String): Unit =
+    withRollover(writer(writerPartitioned(df, touchedBuckets)).mode("overwrite"))
+      .partitionBy("bucket")
+      .parquet(s"$root/$dir")
 
   // ---- manifest ----------------------------------------------------------
   // The commit point is a VERSIONED manifest file (manifest-v<N>.json),
@@ -338,19 +362,24 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withBucket(schema))
 
   /** Writer repartition with sub-bucket fan-out: partition on
-    * (bucket, pmod(xxhash64(key), fanout)) so every bucket spreads over
-    * `fanout` writer tasks. Plain repartition(n, bucket) hash-collides bucket
-    * ids (~1/e of tasks idle, some doubled) and caps each bucket at ONE task —
-    * at 100 TB / 64 buckets that is a ~1.5 TB single-task write. The sub-bucket
-    * hash must differ from the bucket's own `hash`: with the same one, whenever
-    * fanout and numBuckets share a factor (64 buckets, fanout 2) a bucket's
-    * keys all fall into the same sub-bucket and the fan-out does nothing. */
+    * (bucket, pmod(xxhash64(key), fanout)) so a bucket's rows can spread over
+    * up to `fanout` writer tasks. Partitioning on `bucket` alone caps each
+    * bucket at ONE task — at 100 TB / 64 buckets that is a ~1.5 TB single-task
+    * write. The sub-bucket hash must differ from the bucket's own `hash`: with
+    * the same one, whenever fanout and numBuckets share a factor (64 buckets,
+    * fanout 2) a bucket's keys all fall into the same sub-bucket and the
+    * fan-out does nothing.
+    *
+    * No partition count is given, so AQE sizes the writer tasks by bytes: it
+    * coalesces the shuffle into about defaultParallelism tasks, each writing
+    * one file per bucket it holds. An explicit count (touchedBuckets ×
+    * fanout) would run a task per bucket: 64 tasks of ~2.8k rows for a
+    * 64-bucket epoch, each paying a task's fixed cost. */
   private def writerPartitioned(df: DataFrame, touchedBuckets: Int): DataFrame = {
     val fanout =
       if (filesPerBucket > 0) filesPerBucket
       else math.max(1, 2 * spark.sparkContext.defaultParallelism / math.max(1, touchedBuckets))
-    df.repartition(math.max(1, touchedBuckets * fanout), col("bucket"),
-      pmod(xxhash64(Model.keyCols.map(col): _*), lit(fanout)))
+    df.repartition(col("bucket"), pmod(xxhash64(Model.keyCols.map(col): _*), lit(fanout)))
   }
 
   // ---- merge (the exactly-once upsert/delete sink) ------------------------
@@ -439,12 +468,9 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
         // merge-on-read: append ONLY the deduped delta (with lsn + op
         // tombstones); no base read, no join — O(|delta|) write per epoch.
         // Readers reconcile; compaction amortizes read amplification.
-        withRollover(writerPartitioned(
-            SchemaEvolution.alignTo(deltaWithOp, StructType(withBucket(mergedSchema).fields ++ lsnOp)),
-            toMerge.size)
-          .write.mode("overwrite"))
-          .partitionBy("bucket")
-          .parquet(s"$root/$snapDir")
+        writeBuckets(
+          SchemaEvolution.alignTo(deltaWithOp, StructType(withBucket(mergedSchema).fields ++ lsnOp)),
+          toMerge.size, snapDir)
       } else {
         // copy-on-write: rewrite touched buckets = survivors ∪ upserts.
         // The surviving-rows side is current LEFT ANTI JOIN delta keys —
@@ -457,10 +483,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
         val survivors = current.join(keysMaybeBroadcast, Model.keyCols, "left_anti")
         val upserts = SchemaEvolution.alignTo(
           deltaWithOp.filter(col("op") =!= "d"), withBucket(mergedSchema))
-        val out = survivors.unionByName(upserts)
-        withRollover(writerPartitioned(out, toMerge.size).write.mode("overwrite"))
-          .partitionBy("bucket")
-          .parquet(s"$root/$snapDir")
+        writeBuckets(survivors.unionByName(upserts), toMerge.size, snapDir)
       }
 
       // lineage rows (partition, firstLSN, lastLSN, rowCount, bytes) from the
@@ -468,11 +491,11 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
       // committed epoch always has its lineage (a crash in between leaves
       // orphan lineage that the epoch re-run simply overwrites)
       import spark.implicits._
-      mergedStats.map(s =>
+      writer(mergedStats.map(s =>
           Model.LineageRow(epochId, s.bucket, s.firstLsn, s.maxLsn, s.rows, s.bytes))
         .toDF()
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/lineage/epoch=$epochId")
+        .coalesce(1))
+        .mode("overwrite").parquet(s"$root/lineage/epoch=$epochId")
 
       // stage this epoch's bucket states; commit = atomic manifest rename
       val schemas0 = prev.map(_.schemas).getOrElse(
@@ -533,10 +556,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     if (targets.isEmpty) return
     val bucketSet = targets.map(_._1).toSet
     val compDir = s"data/compact-${m.version + 1}"
-    withRollover(writerPartitioned(readWith(Some(m), Some(bucketSet)), bucketSet.size)
-      .write.mode("overwrite"))
-      .partitionBy("bucket")
-      .parquet(s"$root/$compDir")
+    writeBuckets(readWith(Some(m), Some(bucketSet)), bucketSet.size, compDir)
     val sid = m.currentSchemaId
     val updated = m.buckets ++ targets.map { case (b, st) =>
       b.toString -> BucketState(compDir, st.lastEpoch, st.lastLsn, sid)

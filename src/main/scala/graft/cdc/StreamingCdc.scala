@@ -88,7 +88,7 @@ object StreamingCdc {
           // duplicate the dead letters — this is the DLQ's analogue of the
           // main table's (bucket, epochId) fencing
           if (!bad.isEmpty)
-            bad.select("key", "value").write.mode("overwrite")
+            engine.table.writer(bad.select("key", "value")).mode("overwrite")
               .parquet(s"$deadLetterDir/epoch=$epochId")
           val good = parsed.filter(col("_env").isNotNull &&
               col("_env")("source")("lsn").isNotNull && col("_env")("op").isNotNull)

@@ -99,8 +99,12 @@ class ManifestScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("filesPerBucket = 2: every file of a bucket is read back") {
     val table = new SnapshotTable(spark, tmpDir("scanfan"), 4, filesPerBucket = 2)
-    new CdcEngine(spark, table, EngineConfig(numBuckets = 4))
-      .applyEpoch(EventGen.events(spark, 0, 20000, GenConfig(numKeys = 10000)), 0L)
+    // AQE sizes writer tasks by bytes and would merge this small table's
+    // sub-buckets into one task; the fan-out is what is checked here
+    withSqlConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      new CdcEngine(spark, table, EngineConfig(numBuckets = 4))
+        .applyEpoch(EventGen.events(spark, 0, 20000, GenConfig(numKeys = 10000)), 0L)
+    }
     val files = new java.io.File(table.root, "data/snap-0").listFiles().filter(_.isDirectory)
       .map(_.listFiles().count(_.getName.endsWith(".parquet")))
     // sub-buckets can share a writer task, so not every bucket gets 2 files

@@ -103,8 +103,12 @@ class SnapshotTableSpec extends SparkTestBase {
   test("write fan-out: a bucket's rows spread over filesPerBucket writer tasks") {
     val root = tmpDir("fanout")
     val table = new SnapshotTable(spark, root, 2, filesPerBucket = 4)
-    new CdcEngine(spark, table, EngineConfig(numBuckets = 2))
-      .applyEpoch(EventGen.events(spark, 0, 40000, GenConfig(numKeys = 20000)), 0L)
+    // AQE sizes writer tasks by bytes and would merge this small table's
+    // sub-buckets into one task; the fan-out is what is checked here
+    withSqlConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      new CdcEngine(spark, table, EngineConfig(numBuckets = 2))
+        .applyEpoch(EventGen.events(spark, 0, 40000, GenConfig(numKeys = 20000)), 0L)
+    }
     val perBucket = new java.io.File(s"$root/data/snap-0").listFiles()
       .filter(_.isDirectory)
       .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
@@ -113,6 +117,23 @@ class SnapshotTableSpec extends SparkTestBase {
       assert(n > 1, s"bucket $b written by a single task ($n files) despite fanout=4")
       assert(n <= 4, s"bucket $b has $n files > fanout")
     }
+  }
+
+  test("a CoW epoch over all 64 buckets writes 64 files from at most 2 x defaultParallelism tasks") {
+    val g = GenConfig(numKeys = 4000, hotKeys = 8)
+    val table = new SnapshotTable(spark, tmpDir("writetasks"), 64)
+    val engine = new CdcEngine(spark, table, EngineConfig(numBuckets = 64))
+    engine.applyEpoch(EventGen.events(spark, 0, 20000, g), 0L)
+    val writeTasks = tasksDuring(engine.applyEpoch(EventGen.events(spark, 20000, 40000, g), 1L))
+      .count(e => e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+    assert(table.loadManifest().get.buckets.values.count(_.dir == "data/snap-1") == 64)
+    val files = new java.io.File(table.root, "data/snap-1").listFiles().filter(_.isDirectory)
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(files.length == 64 && files.forall(_ == 1), s"files per bucket: ${files.toSeq}")
+    // the bucket write's tasks plus the lineage write's one task; one task
+    // per bucket would be 64 + 1
+    val limit = 2 * spark.sparkContext.defaultParallelism
+    assert(writeTasks <= limit, s"$writeTasks tasks wrote rows, limit $limit")
   }
 
   test("epoch watermark absorbs contiguous ids; out-of-order ids wait in the recent set") {
