@@ -191,14 +191,13 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
   locally {
     val fs = table.fs
     if (fs.exists(signalsDir)) {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       fs.listStatus(signalsDir).map(_.getPath)
         .filter(_.getName.matches("signal-\\d+\\.json"))
         .sortBy(_.getName.stripPrefix("signal-").stripSuffix(".json").toLong)
         .foreach { p =>
           scala.util.Try {
             val in = fs.open(p)
-            val node = try mapper.readTree(in) finally in.close()
+            val node = try SnapshotTable.mapper.readTree(in) finally in.close()
             // field-presence validation (jackson does NOT apply scala
             // defaults for missing fields — a hole would read as 0)
             require(node.hasNonNull("baseEpoch") && node.hasNonNull("selectionSql")
@@ -244,19 +243,14 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
     // parse at analysis time), so force the parse through the session parser
     spark.sessionState.sqlParser.parseExpression(selectionSql)
     val selection = expr(selectionSql)
-    val esc = selectionSql.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val json =
-      s"""{"baseEpoch":$baseEpoch,"selectionSql":"$esc","numChunks":$numChunks}"""
+    val json = SnapshotTable.mapper.createObjectNode()
+      .put("baseEpoch", baseEpoch).put("selectionSql", selectionSql).put("numChunks", numChunks)
     // persist FIRST (accepted signal == durable signal), then enqueue
     val fs = table.fs
     val dst = signalPath(baseEpoch)
     val tmp = new Path(dst.getParent, dst.getName + ".tmp")
     val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    try out.write(SnapshotTable.mapper.writeValueAsBytes(json)) finally out.close()
     if (fs.exists(dst)) fs.delete(dst, false) // re-issue of the same baseEpoch
     require(fs.rename(tmp, dst), s"could not publish signal file $dst")
     pendingSignals.enqueue(SnapshotRequest(baseEpoch, selection, numChunks))
@@ -343,8 +337,7 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
     // fenced epoch k implies the chunk sizes agree (both equal (k+1)*chunk-1)
     if (chunkingChecked) return
     val dir = new Path(s"$lineageDir/epoch=$epochId")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) {
+    if (table.fs.exists(dir)) {
       val recorded = spark.read.parquet(dir.toString)
         .agg(max(col("lastLSN"))).head().getLong(0)
       require(recorded == end - 1,
@@ -355,8 +348,7 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
   }
 
   def readLineage(): DataFrame = {
-    val fs = new Path(lineageDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(lineageDir)))
+    if (!table.fs.exists(new Path(lineageDir)))
       spark.emptyDataFrame
     else spark.read.option("basePath", lineageDir).parquet(lineageDir)
   }

@@ -58,15 +58,12 @@ import java.nio.charset.StandardCharsets
  * [[writerPartitioned]]). Every write under the root (bucket data, merge-on-
  * read deltas, compaction, lineage, the manifest, signals, dead letters) goes
  * through [[NoForkLocalFileSystem]] on `file:` paths, so none forks `chmod`.
- */
-/**
+ *
  * @param mode "cow" (copy-on-write: each epoch rewrites touched buckets —
  *             cheapest reads) or "mor" (merge-on-read: each epoch appends its
  *             deduped delta; readers reconcile base+deltas by max-LSN and
  *             buckets auto-compact past `compactionThreshold` stacked deltas
  *             — Iceberg's two write modes, rebuilt on parquet + manifest)
- */
-/**
  * @param filesPerBucket write fan-out: each touched bucket's rows are
  *        sub-bucketed by key hash into this many groups, which AQE may place
  *        in different writer tasks, so one giant bucket is not a single-task
@@ -198,63 +195,52 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
   }
 
   // ---- deferred-commit (periodic offset-flush) state ---------------------
-  // Epochs applied under a non-Always CommitPolicy stage their bucket states
-  // here; they become durable (and fenced) only at the next manifest rename.
-  // A crash discards this map — the deterministic replay re-applies those
-  // epochs, overwriting the same snap dirs (at-least-once window upgraded to
-  // exactly-once by determinism + overwrite).
-  private var pendingBuckets = Map.empty[String, BucketState]
-  private var pendingEpochs = Vector.empty[Long]
-  private var pendingSchemas = Map.empty[String, String]
-  private var pendingSchemaId: Option[Int] = None
+  // An epoch applied under a non-Always CommitPolicy is staged as the whole
+  // next manifest, built by `merge` from the one manifest it read (the last
+  // staged one, else the durable head); the next epoch builds on it, and
+  // `commitPending` publishes it exactly as built. It becomes durable (and
+  // fenced across a crash) only at that manifest rename. A crash discards
+  // it — the deterministic replay re-applies those epochs, overwriting the
+  // same snap dirs (at-least-once window upgraded to exactly-once by
+  // determinism + overwrite).
+  private var staged: Option[Manifest] = None
 
-  def hasPending: Boolean = pendingEpochs.nonEmpty
+  def hasPending: Boolean = staged.nonEmpty
 
-  /** Manifest view including staged-but-uncommitted epochs (what merges and
-    * reads must see so back-to-back uncommitted epochs compose correctly). */
-  def effectiveManifest(): Option[Manifest] = {
-    val base = loadManifest()
-    if (pendingEpochs.isEmpty) base
-    else {
-      val b = base.getOrElse(Manifest(-1L, numBuckets,
-        Map("0" -> Model.tableSchemaV0.json), 0, Map.empty, Seq.empty))
-      Some(b.copy(
-        schemas = b.schemas ++ pendingSchemas,
-        currentSchemaId = pendingSchemaId.getOrElse(b.currentSchemaId),
-        buckets = b.buckets ++ pendingBuckets,
-        epochs = b.epochs ++ pendingEpochs).normalized)
-    }
-  }
+  /** The manifest merges and reads see: the staged one (so back-to-back
+    * uncommitted epochs compose), else the durable head, else an empty
+    * table at version -1. */
+  def effectiveManifest(): Manifest =
+    staged.orElse(loadManifest()).getOrElse(Manifest(-1L, numBuckets,
+      Map("0" -> Model.tableSchemaV0.json), 0, Map.empty, Seq.empty))
 
-  /** Flush staged epochs into a durable manifest (the offset flush). */
-  def commitPending(): Boolean = {
-    if (pendingEpochs.isEmpty) false
-    else {
-      val base = loadManifest()
-      val m = Manifest(
-        version = base.map(_.version + 1).getOrElse(0L),
-        numBuckets = numBuckets,
-        schemas = base.map(_.schemas).getOrElse(Map("0" -> Model.tableSchemaV0.json)) ++ pendingSchemas,
-        currentSchemaId = pendingSchemaId.orElse(base.map(_.currentSchemaId)).getOrElse(0),
-        buckets = base.map(_.buckets).getOrElse(Map.empty) ++ pendingBuckets,
-        epochs = (base.map(_.epochs).getOrElse(Seq.empty) ++ pendingEpochs).distinct,
-        epochWatermark = base.map(_.epochWatermark).getOrElse(-1L)).normalized
+  /** Flush the staged manifest, as built, into a durable one (the offset
+    * flush). */
+  def commitPending(): Boolean = staged match {
+    case None => false
+    case Some(m) =>
       commitManifest(m)
-      pendingBuckets = Map.empty; pendingEpochs = Vector.empty
-      pendingSchemas = Map.empty; pendingSchemaId = None
+      staged = None
       true
-    }
   }
 
   /** Write manifest-v<N>.json via temp file + rename-to-fresh-name: the
     * atomic commit point (nothing is ever deleted on the commit path, so no
     * crash window can leave the table without a valid manifest). Older
-    * versions are pruned afterwards, keeping a couple for post-mortems. */
+    * versions are pruned afterwards, keeping a couple for post-mortems.
+    * A version's number is fixed when it is staged, so a parseable file
+    * already at the target means another writer committed it first: that
+    * is a conflict, never overwritten. */
   private def commitManifest(m: Manifest): Unit = {
     val target = manifestFile(m.version)
-    // a crashed earlier attempt at this same (never-committed) version may
-    // have left a file — it is garbage by construction, clear it
-    if (fs.exists(target)) fs.delete(target, false)
+    if (fs.exists(target)) {
+      if (loadManifestVersion(m.version).nonEmpty)
+        throw new IllegalStateException(s"manifest version ${m.version} at $root was " +
+          "committed by another writer; this writer's staged epochs are stale")
+      // a crashed earlier attempt at this same (never-committed) version
+      // left an unparseable file — garbage by construction, clear it
+      fs.delete(target, false)
+    }
     val tmp = new Path(root, s".manifest-v${m.version}.json.tmp")
     val out = fs.create(tmp, true)
     try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(m))
@@ -268,8 +254,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
 
   /** durable (manifest) OR staged: both fence re-application in-process;
     * only durable survives a crash. */
-  def isCommitted(epochId: Long): Boolean =
-    effectiveManifest().exists(_.containsEpoch(epochId))
+  def isCommitted(epochId: Long): Boolean = effectiveManifest().containsEpoch(epochId)
 
   def lastCommittedEpoch: Option[Long] = loadManifest().flatMap(_.maxEpoch)
 
@@ -311,34 +296,30 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
         if (!fs.exists(new Path(root, dir))) throw new IllegalStateException(
           s"snapshot expired: manifest v$version references $dir which was vacuumed")
       }
-    readWith(Some(m), only)
+    readWith(m, only)
   }
 
-  private def readWith(manifest: Option[Manifest], only: Option[Set[Int]]): DataFrame = {
+  private def readWith(m: Manifest, only: Option[Set[Int]]): DataFrame = {
     // time travel presents the table THROUGH the historical manifest: its
     // schema version, its bucket->dir mapping; the current path is the same
     // code with the effective (staged-inclusive) manifest
-    val schema = schemaOf(manifest)
-    manifest match {
-      case None => emptyDf(schema)
-      case Some(m) =>
-        val wanted = m.buckets.toSeq
-          .map { case (k, v) => (k.toInt, v) }
-          .filter { case (b, _) => only.forall(_.contains(b)) }
-        val base = scan(m, wanted.collect { case (b, st) if st.dir.nonEmpty => (b, st.dir, st.schemaId) },
-          withBucket(schema), Seq.empty)
-        val deltaRefs = wanted.flatMap { case (b, st) => st.deltas.map(d => (b, d.dir, d.schemaId)) }
-        if (deltaRefs.isEmpty) base.getOrElse(emptyDf(schema))
-        else {
-          // reconcile: base rows lose to any delta row for the same key
-          // (base lsn = -1); per-key max-LSN winner decides, tombstones drop
-          val reconTarget = StructType(withBucket(schema).fields ++ lsnOp)
-          val baseR = base.map(_.withColumn("lsn", lit(-1L)).withColumn("op", lit("r")))
-          val deltas = scan(m, deltaRefs, reconTarget, lsnOp)
-          Dedup.lastPerKey((baseR ++ deltas).reduce(_ unionByName _), Model.keyCols, "lsn")
-            .filter(col("op") =!= "d")
-            .drop("lsn", "op")
-        }
+    val schema = schemaOf(m)
+    val wanted = m.buckets.toSeq
+      .map { case (k, v) => (k.toInt, v) }
+      .filter { case (b, _) => only.forall(_.contains(b)) }
+    val base = scan(m, wanted.collect { case (b, st) if st.dir.nonEmpty => (b, st.dir, st.schemaId) },
+      withBucket(schema), Seq.empty)
+    val deltaRefs = wanted.flatMap { case (b, st) => st.deltas.map(d => (b, d.dir, d.schemaId)) }
+    if (deltaRefs.isEmpty) base.getOrElse(emptyDf(schema))
+    else {
+      // reconcile: base rows lose to any delta row for the same key
+      // (base lsn = -1); per-key max-LSN winner decides, tombstones drop
+      val reconTarget = StructType(withBucket(schema).fields ++ lsnOp)
+      val baseR = base.map(_.withColumn("lsn", lit(-1L)).withColumn("op", lit("r")))
+      val deltas = scan(m, deltaRefs, reconTarget, lsnOp)
+      Dedup.lastPerKey((baseR ++ deltas).reduce(_ unionByName _), Model.keyCols, "lsn")
+        .filter(col("op") =!= "d")
+        .drop("lsn", "op")
     }
   }
 
@@ -405,8 +386,19 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     // one manifest snapshot for the whole merge: the fence check, the
     // schema and the survivor read all see the same commit
     val prev = effectiveManifest()
-    if (prev.exists(_.containsEpoch(epochId)))
+    if (prev.containsEpoch(epochId))
       return MergeResult(epochId, applied = false, Seq.empty)
+
+    // stage the next manifest, built whole from `prev`; commit = atomic
+    // manifest rename. Its version is fixed here: the staged one's while
+    // epochs accumulate, else one past the durable head.
+    def stage(next: Manifest): Manifest = {
+      val m = next.copy(version = if (hasPending) prev.version else prev.version + 1,
+        epochs = next.epochs :+ epochId).normalized
+      staged = Some(m)
+      if (commit) commitPending()
+      m
+    }
 
     val tableSchema = schemaOf(prev)
     val eventDataSchema = StructType(delta.schema.fields
@@ -446,7 +438,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
       // application order (incremental-snapshot chunk epochs interleave with
       // smaller stream epoch ids); cross-epoch ordering is the manifest's
       // containsEpoch job, per-bucket the fence is exact re-delivery.
-      val fenced = prev.toSeq.flatMap(_.buckets.toSeq)
+      val fenced = prev.buckets.toSeq
         .filter { case (b, st) => affected.contains(b.toInt) && st.lastEpoch == epochId }
         .map(_._1.toInt).toSet
       val toMerge = affected -- fenced
@@ -454,8 +446,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
         // an EMPTY epoch still commits its id: leaving a gap would stop the
         // epoch watermark forever and regrow the O(all-epochs) recent set
         // (a destination with zero routed rows this epoch hits this)
-        pendingEpochs = pendingEpochs :+ epochId
-        if (commit) commitPending()
+        stage(prev)
         return MergeResult(epochId, applied = true, Seq.empty)
       }
       if (toMerge.isEmpty) return MergeResult(epochId, applied = false, Seq.empty)
@@ -497,19 +488,16 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
         .coalesce(1))
         .mode("overwrite").parquet(s"$root/lineage/epoch=$epochId")
 
-      // stage this epoch's bucket states; commit = atomic manifest rename
-      val schemas0 = prev.map(_.schemas).getOrElse(
-        Map("0" -> Model.tableSchemaV0.json))
+      // this epoch's schema and bucket states on top of `prev`
       val (schemas, schemaId) =
-        if (!schemaChanged) (schemas0, prev.map(_.currentSchemaId).getOrElse(0))
+        if (!schemaChanged) (prev.schemas, prev.currentSchemaId)
         else {
-          val next = schemas0.keys.map(_.toInt).max + 1
-          (schemas0 + (next.toString -> mergedSchema.json), next)
+          val next = prev.schemas.keys.map(_.toInt).max + 1
+          (prev.schemas + (next.toString -> mergedSchema.json), next)
         }
-      val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty[String, BucketState])
       val epochBuckets = mergedStats.map { s =>
         val key = s.bucket.toString
-        val old = prevBuckets.get(key)
+        val old = prev.buckets.get(key)
         // resume point must be monotone: out-of-LSN-order epochs (e.g.
         // streaming batches whose file order != LSN order) are reconciled at
         // read time, but lastLsn moving backwards would make a resume-by-LSN
@@ -522,26 +510,23 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
               old.map(_.deltas).getOrElse(Seq.empty) :+ DeltaRef(snapDir, schemaId))
           else BucketState(snapDir, epochId, lsnHighWater, schemaId)
         key -> st
-      }.toMap
-      pendingBuckets = pendingBuckets ++ epochBuckets
-      pendingEpochs = pendingEpochs :+ epochId
-      pendingSchemas = pendingSchemas ++ (schemas -- schemas0.keySet)
-      if (schemaChanged) pendingSchemaId = Some(schemaId)
-      if (commit) commitPending()
-      if (mode == "mor" && commit) compactIfNeeded()
+      }
+      val next = stage(prev.copy(schemas = schemas, currentSchemaId = schemaId,
+        buckets = prev.buckets ++ epochBuckets))
+      if (mode == "mor" && commit) compactIfNeeded(next)
       MergeResult(epochId, applied = true, mergedStats)
     } finally keyed.unpersist()
   }
 
-  /** Compact buckets whose stacked delta count exceeds the threshold:
-    * materialize the reconciled state as a new base and clear the deltas.
-    * A separate committed operation (new manifest version). */
-  def compactIfNeeded(): Int = {
-    val m = loadManifest().getOrElse(return 0)
+  /** Compact the buckets of the just-committed `m` whose stacked delta
+    * count exceeds the threshold: materialize the reconciled state as a new
+    * base and clear the deltas. A separate committed operation (new
+    * manifest version). */
+  private def compactIfNeeded(m: Manifest): Unit = {
     val targets = m.buckets.collect {
       case (k, st) if st.deltas.size > compactionThreshold => k.toInt
     }.toSet
-    if (targets.isEmpty) 0 else { compact(Some(targets)); targets.size }
+    if (targets.nonEmpty) compact(m, Some(targets))
   }
 
   /** Rewrite the reconciled state of the given buckets (default: all buckets
@@ -550,13 +535,16 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     // compaction reads the DURABLE manifest; staged epochs would be silently
     // dropped from the rewritten base — flush before compacting
     require(!hasPending, "compact() with staged uncommitted epochs would drop them; flush first")
-    val m = loadManifest().getOrElse(return)
+    loadManifest().foreach(compact(_, only))
+  }
+
+  private def compact(m: Manifest, only: Option[Set[Int]]): Unit = {
     val targets = m.buckets.toSeq.map { case (k, v) => (k.toInt, v) }
       .filter { case (b, st) => st.deltas.nonEmpty && only.forall(_.contains(b)) }
     if (targets.isEmpty) return
     val bucketSet = targets.map(_._1).toSet
     val compDir = s"data/compact-${m.version + 1}"
-    writeBuckets(readWith(Some(m), Some(bucketSet)), bucketSet.size, compDir)
+    writeBuckets(readWith(m, Some(bucketSet)), bucketSet.size, compDir)
     val sid = m.currentSchemaId
     val updated = m.buckets ++ targets.map { case (b, st) =>
       b.toString -> BucketState(compDir, st.lastEpoch, st.lastLsn, sid)
@@ -602,9 +590,8 @@ object SnapshotTable {
   private def schemaOf(m: Manifest, schemaId: Int): StructType =
     DataType.fromJson(m.schemas(schemaId.toString)).asInstanceOf[StructType]
 
-  /** The table schema a manifest presents (v0 for a table with none yet). */
-  private def schemaOf(m: Option[Manifest]): StructType =
-    m.fold(Model.tableSchemaV0)(m => schemaOf(m, m.currentSchemaId))
+  /** The table schema a manifest presents. */
+  private def schemaOf(m: Manifest): StructType = schemaOf(m, m.currentSchemaId)
 
   private def withBucket(schema: StructType): StructType =
     StructType(schema.fields :+ StructField("bucket", IntegerType, nullable = true))

@@ -126,6 +126,40 @@ class EngineE2ESpec extends SparkTestBase {
     assertTableMatchesOracle(table, 0, 15000)
   }
 
+  Seq("cow", "mor").foreach { mode =>
+    test(s"schema evolution across staged epochs publishes both schema ids in one flush ($mode)") {
+      val table = new SnapshotTable(spark, tmpDir(s"stagedschema-$mode"), 4, mode = mode)
+      val engine = new CdcEngine(spark, table,
+        EngineConfig(numBuckets = 4, commitPolicy = CommitPolicy.everyNEpochs(3)))
+      // a durable base at schema 0, so there is a version to stay unchanged
+      engine.applyEpoch(EventGen.events(spark, 0, 5000, gen), 0L)
+      assert(engine.flush())
+      val before = table.loadManifest().get
+      // staged epoch 1 adds `stars` (int), staged epoch 2 widens it to long
+      engine.applyEpoch(EventGen.events(spark, 5000, 10000, gen, schemaId = 1)
+        .withColumn("stars", pmod(col("lsn"), lit(100)).cast("int")), 1L)
+      engine.applyEpoch(EventGen.events(spark, 10000, 15000, gen, schemaId = 2)
+        .withColumn("stars", col("lsn") * 1000L), 2L)
+      assert(table.hasPending)
+      val staged = table.read()
+      assert(staged.schema("stars").dataType == org.apache.spark.sql.types.LongType)
+      assert(staged.filter(col("stars").isNull).count() > 0, "base rows read with null stars")
+      assert(table.loadManifest().get == before, "staged epochs must not touch the durable manifest")
+
+      assert(engine.flush() && !table.hasPending)
+      val after = table.loadManifest().get
+      assert(after.version == before.version + 1 && table.retainedVersions().size == 2)
+      val added = (after.schemas.keySet -- before.schemas.keySet).map(_.toInt).toSeq.sorted
+      val starsType = added.map(id => org.apache.spark.sql.types.DataType
+        .fromJson(after.schemas(id.toString)).asInstanceOf[org.apache.spark.sql.types.StructType]
+        ("stars").dataType.typeName)
+      assert(starsType == Seq("integer", "long") && after.currentSchemaId == added.last,
+        s"schemas added by the flush: ${added.zip(starsType)}")
+      assert(after.epochWatermark == 2L && after.epochs.isEmpty)
+      assertTableMatchesOracle(table, 0, 15000)
+    }
+  }
+
   test("late materialization and full-shuffle dedup produce identical tables") {
     val late = new CdcEngine(spark, new SnapshotTable(spark, tmpDir("lm1"), 8))
     val full = new CdcEngine(spark, new SnapshotTable(spark, tmpDir("lm2"), 8))

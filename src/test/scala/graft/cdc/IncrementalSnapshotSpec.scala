@@ -125,6 +125,29 @@ class IncrementalSnapshotSpec extends SparkTestBase {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
+  test("a signal predicate holding a quote, a backslash and a tab survives a restart") {
+    val root = tmpDir("incsnap6")
+    val table = new SnapshotTable(spark, root, 4)
+    val engine = new CdcEngine(spark, table, EngineConfig(numBuckets = 4))
+    engine.applyEpoch(EventGen.events(spark, 0, 4000, gen).filter(!selection), 0L)
+    // the string literal is q, a quote, one escaped backslash and a raw tab;
+    // no repo equals it, so the predicate selects the same keys as `selection`
+    val sql = "pmod(xxhash64(repo), 3) = 0 AND repo <> 'q\"\\\\\t'"
+    assert(Seq("\"", "\\", "\t").forall(sql.contains))
+    engine.signalSnapshotSql(1_000_000L, sql, 2)
+    val stored = SnapshotTable.mapper.readTree(
+      new java.io.File(s"$root/signals/signal-1000000.json")).get("selectionSql").asText()
+    assert(stored == sql)
+
+    val engine2 = new CdcEngine(spark, table, EngineConfig(numBuckets = 4))
+    assert(engine2.snapshotInProgress, "restart must reload the pending signal")
+    engine2.replayGenerated(4000, 8000, 1, gen)
+    assert(!engine2.snapshotInProgress)
+    val want = digests(EventGen.finalState(spark, 0, 8000, gen))
+    val got = digests(table.read())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
   test("re-issued signal + re-run fence to no-ops (resume semantics)") {
     val root = tmpDir("incsnap2")
     val table = new SnapshotTable(spark, root, 4)

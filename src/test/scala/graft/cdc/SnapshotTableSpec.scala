@@ -202,4 +202,28 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(reopened.loadManifest().get.version == 1L)
     assert(reopened.isCommitted(0L) && reopened.isCommitted(1L))
   }
+
+  test("a stale writer's commit conflicts instead of replacing another writer's manifest") {
+    val root = tmpDir("twowriters")
+    val a = new SnapshotTable(spark, root, 4)
+    val b = new SnapshotTable(spark, root, 4)
+    def delta(lo: Long, hi: Long) =
+      Dedup.lastPerKey(EventGen.events(spark, lo, hi, gen), Model.keyCols, "lsn")
+    def digests(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("repo"), col("path"), sha2(coalesce(col("content"), lit("")), 256))
+    // B stages epoch 1 on the empty table, then A commits epoch 0 first;
+    // both touch every bucket (400 keys over 4 buckets)
+    b.merge(delta(3000, 6000), 1L, commit = false)
+    a.merge(delta(0, 3000), 0L)
+    val committed = a.loadManifest().get
+    val ex = intercept[IllegalStateException](b.commitPending())
+    assert(ex.getMessage.contains(s"manifest version ${committed.version}"), ex.getMessage)
+    // A's manifest and rows are intact
+    val fresh = new SnapshotTable(spark, root, 4)
+    assert(fresh.loadManifest().get == committed)
+    assert(fresh.isCommitted(0L) && !fresh.isCommitted(1L))
+    val want = digests(EventGen.finalState(spark, 0, 3000, gen))
+    val got = digests(fresh.read())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
 }
