@@ -41,9 +41,9 @@ final case class EngineConfig(
     // F2 format selection (reference cdcsdk.server.format.{key,value},
     // ServerApp.java:152-161): the VALUE and KEY converters are selected
     // INDEPENDENTLY, as in the reference (an Avro-key/JSON-value registry
-    // deployment is expressible) — "json" | "avro" | "proto" | "cloudevents"
-    format: String = graft.formats.WireFormat.Json,
-    keyFormat: String = graft.formats.WireFormat.Json,
+    // deployment is expressible)
+    format: graft.formats.WireFormat = graft.formats.WireFormat.Json,
+    keyFormat: graft.formats.WireFormat = graft.formats.WireFormat.Json,
     // schemas.enable (reference ServerApp.java:177-183): embed the Connect
     // schema block in every JSON wire record
     schemasEnable: Boolean = false,
@@ -51,8 +51,8 @@ final case class EngineConfig(
     wireCompression: String = "none",
     // registry-header framing for the binary formats (reference selects
     // Confluent- vs Apicurio-protocol converter classes,
-    // ConvertingEngineBuilder.java:198-234): "confluent" | "apicurio"
-    registryFraming: String = graft.formats.RegistryFraming.Confluent
+    // ConvertingEngineBuilder.java:198-234)
+    registryFraming: graft.formats.RegistryFraming = graft.formats.RegistryFraming.Confluent
 )
 
 class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfig = EngineConfig()) {

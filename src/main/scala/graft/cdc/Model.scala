@@ -62,10 +62,12 @@ object Model {
     StructField("ts_ms", LongType, nullable = false)
   ))
 
-  /** Table schema v0 (what the snapshot table stores). */
+  /** Table schema v0 (what the snapshot table stores). The key fields are
+    * nullable because a merged delta's are: a non-null v0 would register a
+    * second schema id, differing only in nullability, on the first merge. */
   val tableSchemaV0: StructType = StructType(Seq(
-    StructField("repo", StringType, nullable = false),
-    StructField("path", StringType, nullable = false),
+    StructField("repo", StringType, nullable = true),
+    StructField("path", StringType, nullable = true),
     StructField("commit", StringType, nullable = true),
     StructField("lang", StringType, nullable = true),
     StructField("content", StringType, nullable = true)

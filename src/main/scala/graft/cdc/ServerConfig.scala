@@ -26,10 +26,17 @@ object ServerConfig {
 
   /** EngineConfig from dotted properties; absent keys keep the case-class
     * defaults, unknown keys are ignored (forward compatibility, same as the
-    * reference passing unknown props through to the connector). */
+    * reference passing unknown props through to the connector). An unknown
+    * format or framing VALUE fails here, naming its key. */
   def engineConfig(props: Map[String, String]): EngineConfig = {
+    import graft.formats.{RegistryFraming, WireFormat}
     val d = EngineConfig()
     def p(k: String) = props.get(s"graft.engine.$k")
+    def oneOf[T](k: String, byName: Seq[(String, T)], default: T): T = p(k).map { v =>
+      byName.collectFirst { case (`v`, t) => t }.getOrElse(throw new IllegalArgumentException(
+        s"graft.engine.$k: unknown value '$v' (expected one of ${byName.map(_._1).mkString(", ")})"))
+    }.getOrElse(default)
+    val formats = WireFormat.all.map(f => f.name -> f)
     EngineConfig(
       numBuckets = p("num.buckets").map(_.toInt).getOrElse(d.numBuckets),
       saltBuckets = p("salt.buckets").map(_.toInt).getOrElse(d.saltBuckets),
@@ -43,11 +50,12 @@ object ServerConfig {
         case Some(ms) => CommitPolicy.periodic(ms)
       },
       maxRecordsPerFile = p("max.records.per.file").map(_.toLong).getOrElse(d.maxRecordsPerFile),
-      format = p("format.value").getOrElse(d.format),
-      keyFormat = p("format.key").getOrElse(d.keyFormat),
+      format = oneOf("format.value", formats, d.format),
+      keyFormat = oneOf("format.key", formats, d.keyFormat),
       schemasEnable = p("schemas.enable").map(_.toBoolean).getOrElse(d.schemasEnable),
       wireCompression = p("wire.compression").getOrElse(d.wireCompression),
-      registryFraming = p("registry.framing").getOrElse(d.registryFraming))
+      registryFraming = oneOf("registry.framing",
+        RegistryFraming.all.map(f => f.name -> f), d.registryFraming))
   }
 
   /**

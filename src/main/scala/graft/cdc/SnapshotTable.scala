@@ -72,7 +72,7 @@ import java.nio.charset.StandardCharsets
  */
 class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: Int,
                     val mode: String = "cow", val compactionThreshold: Int = 8,
-                    val filesPerBucket: Int = 0, val codec: String = "zstd") {
+                    val filesPerBucket: Int = 0) {
   import SnapshotTable._
   require(mode == "cow" || mode == "mor", s"unknown table mode $mode")
 
@@ -82,8 +82,8 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     * from its config. */
   @volatile var maxRecordsPerFile: Long = 0L
 
-  /** Table-write codec, applied per WRITE (never session-global). Default
-    * zstd — Iceberg's own parquet default — measured 41% fewer bytes than
+  /** Table-write codec, applied per WRITE (never session-global): zstd —
+    * Iceberg's own parquet default — measured 41% fewer bytes than
     * snappy on this content (90.1 vs 153.4 MB for the same table), and
     * write volume is what saturates first under parallel CoW epochs (an
     * uncompressed run collapsed the 4-core replay >2x); smaller objects
@@ -91,7 +91,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     * `w` comes from [[writer]] (its files never fork `chmod`) over
     * [[writerPartitioned]] rows (AQE sizes its tasks by bytes). */
   private def withRollover(w: DataFrameWriter[Row]) = {
-    val c = w.option("compression", codec)
+    val c = w.option("compression", "zstd")
       // content/commit are unique-per-row high-entropy values: parquet's
       // dictionary attempt on them is guaranteed to fall back after burning
       // CPU + dictionary-page memory on every writer task. Per-column
@@ -99,13 +99,13 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
       // dictionaries — they repeat heavily and prune well.
       .option("parquet.enable.dictionary#content", "false")
       .option("parquet.enable.dictionary#commit", "false")
-    // zstd level 1, not parquet-mr's default 3: on this table the bulk of
-    // the bytes is incompressible high-entropy content, and the measured
-    // ratio curve is flat (level 1/3/19 within ±3% of each other, level 1
-    // marginally SMALLER than 3) — so the higher level buys nothing and
-    // write CPU is the contended resource under parallel CoW epochs
-    val z = if (codec == "zstd") c.option("parquet.compression.codec.zstd.level", "1") else c
-    if (maxRecordsPerFile > 0) z.option("maxRecordsPerFile", maxRecordsPerFile) else z
+      // zstd level 1, not parquet-mr's default 3: on this table the bulk of
+      // the bytes is incompressible high-entropy content, and the measured
+      // ratio curve is flat (level 1/3/19 within ±3% of each other, level 1
+      // marginally SMALLER than 3) — so the higher level buys nothing and
+      // write CPU is the contended resource under parallel CoW epochs
+      .option("parquet.compression.codec.zstd.level", "1")
+    if (maxRecordsPerFile > 0) c.option("maxRecordsPerFile", maxRecordsPerFile) else c
   }
 
   private val hconf = spark.sparkContext.hadoopConfiguration

@@ -1,15 +1,13 @@
 package graft.formats
 
+import graft.formats.WireBytes._
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.avro.io.DecoderFactory
+import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
 import org.apache.avro.util.Utf8
-import org.apache.spark.sql.{Column, DataFrame, ExprColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, SpecializedGetters, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,7 +27,8 @@ import java.io.ByteArrayOutputStream
  * avro-1.12.1.jar), so the row<->bytes bridge is a direct binary codec
  * (writer/reader closures below, with the library reader as the
  * cross-version resolution path). The codec runs as native Catalyst
- * expressions over InternalRow ([[AvroEncodeExpr]]/[[AvroDecodeExpr]]) —
+ * expressions over InternalRow (the [[BinaryWire]] encode/decode
+ * expressions around this object's compiled writer and reader) —
  * r6 optimization: the former mapPartitions bridge deserialized every row
  * to an external Row (java.sql temporals, scala Maps, boxed structs) and
  * re-serialized it through a RowEncoder, which dominated the round-trip
@@ -40,9 +39,7 @@ import java.io.ByteArrayOutputStream
  * point of the format: the per-record overhead is 5 header bytes, not an
  * embedded schema.
  */
-object AvroWire {
-
-  val MAGIC: Byte = 0x00
+object AvroWire extends BinaryWire("avro", 0x00) {
 
   /** Recursive: nested structs become named records (record name = the
     * field path, so sibling nestings never collide), arrays become avro
@@ -100,6 +97,9 @@ object AvroWire {
     Schema.createRecord(name, null, "graft", false, java.util.Arrays.asList(fields: _*))
   }
 
+  /** writes field `i` of a row/array/map-value holder to avro binary */
+  private type FieldWriter = (ByteArrayOutputStream, SpecializedGetters, Int) => Unit
+
   /**
    * Direct Avro-binary writer (the public spec: zigzag-varint longs/ints/
    * lengths/union-indexes/array-block-counts, little-endian float/double,
@@ -116,47 +116,31 @@ object AvroWire {
    * per-row path does no type dispatch and no boxing beyond the values
    * the wire itself needs.
    */
-  private def writeVarLong(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = (v0 << 1) ^ (v0 >> 63) // zigzag
-    while ((v & ~0x7fL) != 0L) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
-  /** writes field `i` of a row/array/map-value holder to avro binary */
-  private type FieldWriter = (ByteArrayOutputStream, SpecializedGetters, Int) => Unit
-
   private def writerFor(dt: DataType, nullable: Boolean): FieldWriter = {
     val w: FieldWriter = dt match {
-      case LongType    => (out, g, i) => writeVarLong(out, g.getLong(i))
-      case IntegerType => (out, g, i) => writeVarLong(out, g.getInt(i).toLong)
-      case ShortType   => (out, g, i) => writeVarLong(out, g.getShort(i).toLong)
+      case LongType    => (out, g, i) => writeZigzag(out, g.getLong(i))
+      case IntegerType => (out, g, i) => writeZigzag(out, g.getInt(i).toLong)
+      case ShortType   => (out, g, i) => writeZigzag(out, g.getShort(i).toLong)
       case BooleanType => (out, g, i) => out.write(if (g.getBoolean(i)) 1 else 0)
-      case DoubleType => (out, g, i) => {
-        var bits = java.lang.Double.doubleToLongBits(g.getDouble(i))
-        var j = 0; while (j < 8) { out.write((bits & 0xff).toInt); bits >>>= 8; j += 1 }
-      }
-      case FloatType => (out, g, i) => {
-        var bits = java.lang.Float.floatToIntBits(g.getFloat(i))
-        var j = 0; while (j < 4) { out.write(bits & 0xff); bits >>>= 8; j += 1 }
-      }
+      case DoubleType => (out, g, i) => writeFixed64(out, java.lang.Double.doubleToLongBits(g.getDouble(i)))
+      case FloatType => (out, g, i) => writeFixed32(out, java.lang.Float.floatToIntBits(g.getFloat(i)))
       case StringType => (out, g, i) => {
         val u = g.getUTF8String(i)
-        writeVarLong(out, u.numBytes.toLong); u.writeTo(out)
+        writeZigzag(out, u.numBytes.toLong); u.writeTo(out)
       }
       case BinaryType => (out, g, i) => {
         val b = g.getBinary(i)
-        writeVarLong(out, b.length.toLong); out.write(b, 0, b.length)
+        writeZigzag(out, b.length.toLong); out.write(b, 0, b.length)
       }
       // temporal values are ALREADY micros-since-epoch longs / days ints in
       // the internal representation — the wire form, no conversion at all
-      case TimestampType | TimestampNTZType => (out, g, i) => writeVarLong(out, g.getLong(i))
-      case DateType => (out, g, i) => writeVarLong(out, g.getInt(i).toLong)
+      case TimestampType | TimestampNTZType => (out, g, i) => writeZigzag(out, g.getLong(i))
+      case DateType => (out, g, i) => writeZigzag(out, g.getInt(i).toLong)
       case d: DecimalType => (out, g, i) => {
         // Avro decimal logical type: unscaled two's-complement big-endian
         // bytes at the SCHEMA's scale (internal Decimal is at that scale)
-        val b = g.getDecimal(i, d.precision, d.scale)
-          .toJavaBigDecimal.unscaledValue().toByteArray
-        writeVarLong(out, b.length.toLong); out.write(b, 0, b.length)
+        val b = decimalBytes(g.getDecimal(i, d.precision, d.scale))
+        writeZigzag(out, b.length.toLong); out.write(b, 0, b.length)
       }
       case MapType(StringType, vt, valueContainsNull) =>
         val vw = writerFor(vt, valueContainsNull)
@@ -164,12 +148,12 @@ object AvroWire {
           val m = g.getMap(i)
           val n = m.numElements()
           if (n > 0) {
-            writeVarLong(out, n.toLong)
+            writeZigzag(out, n.toLong)
             val ks = m.keyArray(); val vs = m.valueArray()
             var j = 0
             while (j < n) {
               val k = ks.getUTF8String(j)
-              writeVarLong(out, k.numBytes.toLong); k.writeTo(out)
+              writeZigzag(out, k.numBytes.toLong); k.writeTo(out)
               vw(out, vs, j)
               j += 1
             }
@@ -189,7 +173,7 @@ object AvroWire {
           val a = g.getArray(i)
           val n = a.numElements()
           if (n > 0) {
-            writeVarLong(out, n.toLong)
+            writeZigzag(out, n.toLong)
             var j = 0
             while (j < n) { ew(out, a, j); j += 1 }
           }
@@ -209,13 +193,15 @@ object AvroWire {
   }
 
   /** top-level record writer (no union prefix) for a payload StructType */
-  private[formats] def recordWriter(st: StructType): (ByteArrayOutputStream, InternalRow) => Unit = {
+  override private[formats] def recordWriter(st: StructType): (ByteArrayOutputStream, InternalRow) => Unit = {
     val fws = st.fields.map(f => writerFor(f.dataType, f.nullable))
     (out, row) => {
       var i = 0
       while (i < fws.length) { fws(i)(out, row, i); i += 1 }
     }
   }
+
+  private type FieldReader = (Array[Byte], Cursor) => Any
 
   /**
    * Direct Avro-binary reader for the NO-RESOLUTION case (writer schema id
@@ -228,73 +214,48 @@ object AvroWire {
    * of closures producing INTERNAL values (UTF8String over the wire buffer,
    * micros longs, GenericInternalRow).
    */
-  private final class Cursor(var pos: Int)
-
-  private def readVarLong(wire: Array[Byte], c: Cursor): Long = {
-    var shift = 0; var acc = 0L; var b = 0
-    do {
-      b = wire(c.pos) & 0xff; c.pos += 1
-      acc |= (b & 0x7fL) << shift; shift += 7
-    } while ((b & 0x80) != 0)
-    (acc >>> 1) ^ -(acc & 1) // unzigzag
-  }
-
-  private type FieldReader = (Array[Byte], Cursor) => Any
-
   private def readerFor(dt: DataType, nullable: Boolean): FieldReader = {
     val r: FieldReader = dt match {
-      case LongType    => (w, c) => readVarLong(w, c)
-      case IntegerType => (w, c) => readVarLong(w, c).toInt
-      case ShortType   => (w, c) => readVarLong(w, c).toShort
+      case LongType    => (w, c) => readZigzag(w, c)
+      case IntegerType => (w, c) => readZigzag(w, c).toInt
+      case ShortType   => (w, c) => readZigzag(w, c).toShort
       case BooleanType => (w, c) => { val b = w(c.pos); c.pos += 1; b != 0 }
-      case DoubleType => (w, c) => {
-        var bits = 0L
-        var i = 0; while (i < 8) { bits |= (w(c.pos + i) & 0xffL) << (8 * i); i += 1 }
-        c.pos += 8
-        java.lang.Double.longBitsToDouble(bits)
-      }
-      case FloatType => (w, c) => {
-        var bits = 0
-        var i = 0; while (i < 4) { bits |= (w(c.pos + i) & 0xff) << (8 * i); i += 1 }
-        c.pos += 4
-        java.lang.Float.intBitsToFloat(bits)
-      }
+      case DoubleType => (w, c) => java.lang.Double.longBitsToDouble(readFixed64(w, c))
+      case FloatType => (w, c) => java.lang.Float.intBitsToFloat(readFixed32(w, c))
       case StringType => (w, c) => {
-        val len = readVarLong(w, c).toInt
+        val len = readZigzag(w, c).toInt
         val s = UTF8String.fromBytes(w, c.pos, len)
         c.pos += len; s
       }
       case BinaryType => (w, c) => {
-        val len = readVarLong(w, c).toInt
+        val len = readZigzag(w, c).toInt
         val b = java.util.Arrays.copyOfRange(w, c.pos, c.pos + len)
         c.pos += len; b
       }
-      case TimestampType | TimestampNTZType => (w, c) => readVarLong(w, c)
-      case DateType => (w, c) => readVarLong(w, c).toInt
+      case TimestampType | TimestampNTZType => (w, c) => readZigzag(w, c)
+      case DateType => (w, c) => readZigzag(w, c).toInt
       case d: DecimalType => (w, c) => {
-        val len = readVarLong(w, c).toInt
-        val unscaled = new java.math.BigInteger(
-          java.util.Arrays.copyOfRange(w, c.pos, c.pos + len))
+        val len = readZigzag(w, c).toInt
         c.pos += len
-        Decimal(new java.math.BigDecimal(unscaled, d.scale), d.precision, d.scale)
+        decimalFrom(w, c.pos - len, c.pos, d)
       }
       case MapType(StringType, vt, valueContainsNull) =>
         val vr = readerFor(vt, valueContainsNull)
         (w, c) => {
           val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
           val vals = scala.collection.mutable.ArrayBuffer.empty[Any]
-          var count = readVarLong(w, c)
+          var count = readZigzag(w, c)
           while (count != 0L) {
-            if (count < 0L) { readVarLong(w, c); count = -count } // block byte-size
+            if (count < 0L) { readZigzag(w, c); count = -count } // block byte-size
             var i = 0L
             while (i < count) {
-              val klen = readVarLong(w, c).toInt
+              val klen = readZigzag(w, c).toInt
               keys += UTF8String.fromBytes(w, c.pos, klen)
               c.pos += klen
               vals += vr(w, c)
               i += 1
             }
-            count = readVarLong(w, c)
+            count = readZigzag(w, c)
           }
           new ArrayBasedMapData(
             new GenericArrayData(keys.toArray), new GenericArrayData(vals.toArray))
@@ -311,18 +272,18 @@ object AvroWire {
         val er = readerFor(et, containsNull)
         (w, c) => {
           val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
-          var count = readVarLong(w, c)
+          var count = readZigzag(w, c)
           while (count != 0L) {
-            if (count < 0L) { readVarLong(w, c); count = -count } // block byte-size
+            if (count < 0L) { readZigzag(w, c); count = -count } // block byte-size
             var i = 0L
             while (i < count) { buf += er(w, c); i += 1 }
-            count = readVarLong(w, c)
+            count = readZigzag(w, c)
           }
           new GenericArrayData(buf.toArray)
         }
       case other => throw new IllegalArgumentException(s"unsupported avro field type $other")
     }
-    if (nullable) (w, c) => if (readVarLong(w, c) == 0L) null else r(w, c)
+    if (nullable) (w, c) => if (readZigzag(w, c) == 0L) null else r(w, c)
     else r
   }
 
@@ -335,10 +296,8 @@ object AvroWire {
     case null => null
     case u: Utf8 => UTF8String.fromString(u.toString)
     case bb: java.nio.ByteBuffer if dt.isInstanceOf[DecimalType] =>
-      val d = dt.asInstanceOf[DecimalType]
       val a = new Array[Byte](bb.remaining()); bb.get(a)
-      Decimal(new java.math.BigDecimal(new java.math.BigInteger(a), d.scale),
-        d.precision, d.scale)
+      decimalFrom(a, 0, a.length, dt.asInstanceOf[DecimalType])
     case m: java.util.Map[_, _] =>
       val vt = dt.asInstanceOf[MapType].valueType
       val keys = new Array[Any](m.size()); val vals = new Array[Any](m.size())
@@ -370,136 +329,42 @@ object AvroWire {
     case _ => v
   }
 
-  def headerSchemaId(wire: Array[Byte],
-                     framing: String = RegistryFraming.Confluent): Int =
-    RegistryFraming.schemaId(framing, MAGIC, wire)
-
   /**
-   * Serialize `payloadCols` of each row into an Avro `wire` binary column
-   * (header + body); `keep` columns pass through. Implemented as a native
-   * Catalyst expression over the payload struct — the projection stays in
-   * the surrounding whole-stage-codegen'd stage, one virtual call per row.
+   * Reader for `registry`'s `targetSchemaId`. Exact-id records take the
+   * compiled direct reader; records written at a different registered
+   * version resolve through the library reader (writer schema from the
+   * header, reader schema = target version; Avro schema resolution fills
+   * added fields with defaults). The fallback keeps one library reader per
+   * WRITER version (it embeds the expensive writer->reader resolution) and a
+   * reused BinaryDecoder.
    */
-  def encode(df: DataFrame, payloadCols: Seq[String], schemaId: Int,
-             keep: Seq[String] = Seq.empty,
-             framing: String = RegistryFraming.Confluent): DataFrame = {
-    val payloadType = StructType(payloadCols.map(c => df.schema(c)).toArray)
-    val enc = ExprColumnBridge.column(AvroEncodeExpr(
-      ExprColumnBridge.expression(struct(payloadCols.map(col): _*)),
-      payloadType, schemaId, framing))
-    df.select(keep.map(col) :+ enc.as("wire"): _*)
-  }
-
-  /**
-   * Decode a `wire` binary column back into flat payload columns; the
-   * header's schema id selects the reader schema from `registry` (our event
-   * schema registry), so records written at different schema versions decode
-   * side by side. The decode expression parses each record ONCE into a
-   * struct intermediate (multi-referenced non-cheap expressions are not
-   * duplicated by CollapseProject — same contract Envelope.decodeJson relies
-   * on for from_json), then the field projection is pure GetStructField.
-   */
-  def decode(df: DataFrame, registry: Map[Int, StructType], targetSchemaId: Int,
-             keep: Seq[String] = Seq.empty,
-             framing: String = RegistryFraming.Confluent): DataFrame = {
+  override private[formats] def recordReader(registry: Map[Int, StructType],
+                                             targetSchemaId: Int): RecordReader = {
     val target = registry(targetSchemaId)
-    val dec = ExprColumnBridge.column(AvroDecodeExpr(
-      ExprColumnBridge.expression(col("wire")), registry, targetSchemaId, framing))
-    val alias = WireFormat.freshAlias("_dec", keep)
-    df.select(keep.map(col) :+ dec.as(alias): _*)
-      .select(keep.map(col) ++
-        target.fieldNames.toSeq.map(n => col(alias)(n).as(n)): _*)
-  }
-
-  /** Registry-framed Avro encode of a payload struct as a Catalyst
-    * expression: header bytes + the compiled record writer, evaluated on the
-    * struct's InternalRow. Codegen emits a single call into [[encodeRow]],
-    * so the projection stays inside whole-stage codegen. */
-  case class AvroEncodeExpr(child: Expression, payloadType: StructType,
-                            schemaId: Int, framing: String)
-      extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "avro_encode"
-
-    @transient private lazy val hdr = RegistryFraming.header(framing, MAGIC, schemaId)
-    @transient private lazy val writer = recordWriter(payloadType)
-    // per-task instance (task binaries are deserialized per task), so the
-    // reused buffer is thread-confined
-    @transient private lazy val bos = new ByteArrayOutputStream(256)
-
-    def encodeRow(row: InternalRow): Array[Byte] = {
-      bos.reset()
-      bos.write(hdr, 0, hdr.length)
-      writer(bos, row)
-      bos.toByteArray
-    }
-
-    override protected def nullSafeEval(v: Any): Any =
-      encodeRow(v.asInstanceOf[InternalRow])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("avroEnc", this, classOf[AvroEncodeExpr].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.encodeRow($c);")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** Registry-framed Avro decode to a struct of the target schema version.
-    * Exact-id records take the compiled direct reader; records written at a
-    * different registered version resolve through the library reader. */
-  case class AvroDecodeExpr(child: Expression, registry: Map[Int, StructType],
-                            targetSchemaId: Int, framing: String)
-      extends UnaryExpression {
-    override def dataType: DataType = registry(targetSchemaId)
-    override def prettyName: String = "avro_decode"
-
-    @transient private lazy val hlen = RegistryFraming.headerLen(framing)
-    @transient private lazy val target = registry(targetSchemaId)
-    @transient private lazy val fieldReaders =
-      target.fields.map(f => readerFor(f.dataType, f.nullable))
-    // library-reader fallback state: one reader per WRITER schema version
-    // per task (the reader embeds the expensive writer->reader resolution)
-    @transient private lazy val schemas = scala.collection.mutable.Map.empty[Int, Schema]
-    private def schemaFor(id: Int): Schema =
+    val n = target.fields.length
+    val fieldReaders = target.fields.map(f => readerFor(f.dataType, f.nullable))
+    val schemas = scala.collection.mutable.Map.empty[Int, Schema]
+    def schemaFor(id: Int): Schema =
       schemas.getOrElseUpdate(id, avroSchema(registry(id), s"payload_v$id"))
-    @transient private lazy val readers =
-      scala.collection.mutable.Map.empty[Int, GenericDatumReader[GenericRecord]]
-    private def libReaderFor(id: Int): GenericDatumReader[GenericRecord] =
-      readers.getOrElseUpdate(id,
-        new GenericDatumReader[GenericRecord](schemaFor(id), schemaFor(targetSchemaId)))
-    @transient private var decoder: org.apache.avro.io.BinaryDecoder = null
-
-    def decodeWire(wire: Array[Byte]): InternalRow = {
-      val id = RegistryFraming.schemaId(framing, MAGIC, wire)
-      val n = target.fields.length
+    val readers = scala.collection.mutable.Map.empty[Int, GenericDatumReader[GenericRecord]]
+    var decoder: BinaryDecoder = null
+    (wire, id, bodyOffset) => {
       val vals = new Array[Any](n)
       if (id == targetSchemaId) {
         // fast path: exact schema match, direct binary read
-        val c = new Cursor(hlen)
+        val c = new Cursor(bodyOffset)
         var i = 0
         while (i < n) { vals(i) = fieldReaders(i)(wire, c); i += 1 }
       } else {
-        // writer schema from the header, reader schema = target version
-        // (Avro schema resolution fills added fields with defaults)
-        decoder = DecoderFactory.get().binaryDecoder(wire, hlen, wire.length - hlen, decoder)
-        val rec = libReaderFor(id).read(null, decoder)
+        decoder = DecoderFactory.get().binaryDecoder(
+          wire, bodyOffset, wire.length - bodyOffset, decoder)
+        val rec = readers.getOrElseUpdate(id,
+          new GenericDatumReader[GenericRecord](schemaFor(id), schemaFor(targetSchemaId)))
+          .read(null, decoder)
         var i = 0
         while (i < n) { vals(i) = fromDatum(rec.get(i), target.fields(i).dataType); i += 1 }
       }
       new GenericInternalRow(vals)
     }
-
-    override protected def nullSafeEval(v: Any): Any =
-      decodeWire(v.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("avroDec", this, classOf[AvroDecodeExpr].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.decodeWire($c);")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 }

@@ -1,11 +1,9 @@
 package graft.formats
 
-import org.apache.spark.sql.{DataFrame, ExprColumnBridge}
+import graft.formats.WireBytes._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, SpecializedGetters, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,23 +25,12 @@ import java.io.ByteArrayOutputStream
  * [[RegistryFraming]] — Confluent 4-byte or Apicurio 8-byte).
  *
  * r6 optimization: like AvroWire, the codec runs as native Catalyst
- * expressions over InternalRow ([[ProtoEncodeExpr]]/[[ProtoDecodeExpr]]),
+ * expressions over InternalRow (the shared [[BinaryWire]] expressions),
  * with the writer/parser for each schema COMPILED ONCE into per-field
  * closures — no external-Row conversion, no per-row type dispatch, and the
  * surrounding plan stays a plain projection.
  */
-object ProtoWire {
-
-  val MAGIC: Byte = 0x01
-
-  private def writeVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
-  private def zigzag(n: Long): Long = (n << 1) ^ (n >> 63)
-  private def unzigzag(n: Long): Long = (n >>> 1) ^ -(n & 1)
+object ProtoWire extends BinaryWire("proto", 0x01) {
 
   private def wireType(dt: DataType): Int = dt match {
     case LongType | IntegerType | BooleanType => 0 // varint (zigzag ints)
@@ -119,14 +106,12 @@ object ProtoWire {
         case DateType => (out, g, i) => { writeVarint(out, tag); writeVarint(out, zigzag(g.getInt(i).toLong)) }
         case d: DecimalType => (out, g, i) => {
           writeVarint(out, tag)
-          val b = g.getDecimal(i, d.precision, d.scale)
-            .toJavaBigDecimal.unscaledValue().toByteArray
+          val b = decimalBytes(g.getDecimal(i, d.precision, d.scale))
           writeVarint(out, b.length.toLong); out.write(b, 0, b.length)
         }
         case DoubleType => (out, g, i) => {
           writeVarint(out, tag)
-          var bits = java.lang.Double.doubleToLongBits(g.getDouble(i))
-          var j = 0; while (j < 8) { out.write((bits & 0xff).toInt); bits >>>= 8; j += 1 }
+          writeFixed64(out, java.lang.Double.doubleToLongBits(g.getDouble(i)))
         }
         case StringType => (out, g, i) => {
           writeVarint(out, tag)
@@ -139,7 +124,7 @@ object ProtoWire {
           writeVarint(out, b.length.toLong); out.write(b, 0, b.length)
         }
         case st: StructType =>
-          val mw = messageWriter(st)
+          val mw = recordWriter(st)
           (out, g, i) => {
             val nested = new ByteArrayOutputStream(64)
             mw(nested, g.getStruct(i, st.fields.length))
@@ -150,7 +135,7 @@ object ProtoWire {
       }
   }
 
-  private[formats] def messageWriter(st: StructType): (ByteArrayOutputStream, InternalRow) => Unit = {
+  override private[formats] def recordWriter(st: StructType): (ByteArrayOutputStream, InternalRow) => Unit = {
     val fws = st.fields.zipWithIndex.map { case (f, i) => valueWriterFor(i + 1, f.dataType) }
     (out, row) => {
       var i = 0
@@ -207,21 +192,8 @@ object ProtoWire {
     }
 
     def parse(wire: Array[Byte], from: Int, to: Int): Array[Any] = {
-      var pos = from
-      def readVarint(): Long = {
-        var shift = 0; var acc = 0L; var b = 0
-        do {
-          b = wire(pos) & 0xff; pos += 1
-          acc |= (b & 0x7fL) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        acc
-      }
-      def readFixed64(): Double = {
-        var bits = 0L
-        var i = 0; while (i < 8) { bits |= (wire(pos + i) & 0xffL) << (8 * i); i += 1 }
-        pos += 8
-        java.lang.Double.longBitsToDouble(bits)
-      }
+      val c = new Cursor(from)
+      def readDouble(): Double = java.lang.Double.longBitsToDouble(readFixed64(wire, c))
       val acc = new Array[Any](arity)
       def put(idx: Int, v: Any): Unit =
         if (isArray(idx)) {
@@ -231,23 +203,23 @@ object ProtoWire {
           }
           buf += v
         } else acc(idx) = v
-      while (pos < to) {
-        val tag = readVarint()
+      while (c.pos < to) {
+        val tag = readVarint(wire, c)
         val idx = (tag >>> 3).toInt - 1
         val wt = (tag & 7).toInt
         val known = idx >= 0 && idx < arity
         wt match {
           case 0 =>
-            val v = readVarint()
+            val v = readVarint(wire, c)
             if (known) put(idx, varintConv(idx)(v))
           case 1 =>
-            val d = readFixed64()
+            val d = readDouble()
             if (known) put(idx, d)
           case 2 =>
-            val len = readVarint().toInt
-            val start = pos
+            val len = readVarint(wire, c).toInt
+            val start = c.pos
             val end = start + len
-            pos = end
+            c.pos = end
             if (known) {
               if (isMap(idx)) {
                 val entry = entryParsers(idx).parse(wire, start, end)
@@ -268,19 +240,17 @@ object ProtoWire {
                 // type 2 wrapping a block of varints/fixed64); our writer
                 // emits unpacked (also valid), so this path is pure
                 // read-side interop with foreign records
-                pos = start
-                while (pos < end) {
-                  if (elemWireType(idx) == 0) put(idx, varintConv(idx)(readVarint()))
-                  else put(idx, readFixed64())
+                c.pos = start
+                while (c.pos < end) {
+                  if (elemWireType(idx) == 0) put(idx, varintConv(idx)(readVarint(wire, c)))
+                  else put(idx, readDouble())
                 }
-                pos = end
+                c.pos = end
               } else elemTypes(idx) match {
                 case StringType =>
                   put(idx, UTF8String.fromBytes(wire, start, len))
                 case d: DecimalType =>
-                  put(idx, Decimal(new java.math.BigDecimal(new java.math.BigInteger(
-                    java.util.Arrays.copyOfRange(wire, start, end)), d.scale),
-                    d.precision, d.scale))
+                  put(idx, decimalFrom(wire, start, end, d))
                 case _: StructType =>
                   put(idx, new GenericInternalRow(nestedParsers(idx).parse(wire, start, end)))
                 case _ =>
@@ -308,96 +278,25 @@ object ProtoWire {
     }
   }
 
-  def headerSchemaId(wire: Array[Byte],
-                     framing: String = RegistryFraming.Confluent): Int =
-    RegistryFraming.schemaId(framing, MAGIC, wire)
-
-  /** Serialize `payloadCols` into a proto3-wire `wire` binary column, as a
-    * native Catalyst expression (plain projection, no external rows). */
-  def encode(df: DataFrame, payloadCols: Seq[String], schemaId: Int,
-             keep: Seq[String] = Seq.empty,
-             framing: String = RegistryFraming.Confluent): DataFrame = {
-    val payloadType = StructType(payloadCols.map(c => df.schema(c)).toArray)
-    val enc = ExprColumnBridge.column(ProtoEncodeExpr(
-      ExprColumnBridge.expression(struct(payloadCols.map(col): _*)),
-      payloadType, schemaId, framing))
-    df.select(keep.map(col) :+ enc.as("wire"): _*)
-  }
-
-  /** Decode a proto3-wire `wire` column; absent fields read as NULL. The
-    * decode expression parses each record once into a struct intermediate
-    * (not duplicated by CollapseProject — non-cheap multi-referenced
-    * expression), then the field projection is pure GetStructField. */
-  def decode(df: DataFrame, registry: Map[Int, StructType], targetSchemaId: Int,
-             keep: Seq[String] = Seq.empty,
-             framing: String = RegistryFraming.Confluent): DataFrame = {
+  /** Reader for `registry`'s `targetSchemaId`. Top-level schema routing is
+    * by FIELD NAME onto the target version (nested shapes follow the written
+    * schema — proto has no Avro-style nested resolution); the per-writer-
+    * version parser and the name routing are compiled once per version, not
+    * per row. */
+  override private[formats] def recordReader(registry: Map[Int, StructType],
+                                             targetSchemaId: Int): RecordReader = {
     val target = registry(targetSchemaId)
-    val dec = ExprColumnBridge.column(ProtoDecodeExpr(
-      ExprColumnBridge.expression(col("wire")), registry, targetSchemaId, framing))
-    val alias = WireFormat.freshAlias("_dec", keep)
-    df.select(keep.map(col) :+ dec.as(alias): _*)
-      .select(keep.map(col) ++
-        target.fieldNames.toSeq.map(n => col(alias)(n).as(n)): _*)
-  }
-
-  /** Registry-framed proto3 encode of a payload struct as a Catalyst
-    * expression (codegen emits one call into [[encodeRow]]). */
-  case class ProtoEncodeExpr(child: Expression, payloadType: StructType,
-                             schemaId: Int, framing: String)
-      extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "proto_encode"
-
-    @transient private lazy val hdr = RegistryFraming.header(framing, MAGIC, schemaId)
-    @transient private lazy val writer = messageWriter(payloadType)
-    // per-task instance (task binaries are deserialized per task)
-    @transient private lazy val bos = new ByteArrayOutputStream(256)
-
-    def encodeRow(row: InternalRow): Array[Byte] = {
-      bos.reset()
-      bos.write(hdr, 0, hdr.length)
-      writer(bos, row)
-      bos.toByteArray
-    }
-
-    override protected def nullSafeEval(v: Any): Any =
-      encodeRow(v.asInstanceOf[InternalRow])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("protoEnc", this, classOf[ProtoEncodeExpr].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.encodeRow($c);")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** Registry-framed proto3 decode to a struct of the target schema version.
-    * Top-level schema routing is by FIELD NAME onto the target version
-    * (nested shapes follow the written schema — proto has no Avro-style
-    * nested resolution); the per-writer-version parser and the name routing
-    * are compiled once per version, not per row. */
-  case class ProtoDecodeExpr(child: Expression, registry: Map[Int, StructType],
-                             targetSchemaId: Int, framing: String)
-      extends UnaryExpression {
-    override def dataType: DataType = registry(targetSchemaId)
-    override def prettyName: String = "proto_decode"
-
-    @transient private lazy val hlen = RegistryFraming.headerLen(framing)
-    @transient private lazy val target = registry(targetSchemaId)
     // per WRITER version: (compiled parser, target-field -> written-field map)
-    @transient private lazy val parsers =
-      scala.collection.mutable.Map.empty[Int, (MsgParser, Array[Int])]
-    private def parserFor(id: Int): (MsgParser, Array[Int]) =
+    val parsers = scala.collection.mutable.Map.empty[Int, (MsgParser, Array[Int])]
+    def parserFor(id: Int): (MsgParser, Array[Int]) =
       parsers.getOrElseUpdate(id, {
         val written = registry(id)
         val byName = written.fieldNames.zipWithIndex.toMap
         (new MsgParser(written), target.fieldNames.map(byName.getOrElse(_, -1)))
       })
-
-    def decodeWire(wire: Array[Byte]): InternalRow = {
-      val (parser, routing) = parserFor(RegistryFraming.schemaId(framing, MAGIC, wire))
-      val parsed = parser.parse(wire, hlen, wire.length)
+    (wire, id, bodyOffset) => {
+      val (parser, routing) = parserFor(id)
+      val parsed = parser.parse(wire, bodyOffset, wire.length)
       val vals = new Array[Any](routing.length)
       var i = 0
       while (i < routing.length) {
@@ -407,16 +306,5 @@ object ProtoWire {
       }
       new GenericInternalRow(vals)
     }
-
-    override protected def nullSafeEval(v: Any): Any =
-      decodeWire(v.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("protoDec", this, classOf[ProtoDecodeExpr].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.decodeWire($c);")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 }

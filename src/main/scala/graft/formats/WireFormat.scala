@@ -1,15 +1,14 @@
 package graft.formats
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, ExprColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BinaryType, DataType, StructField, StructType}
 
-/**
- * Format selection (reference F2: `cdcsdk.server.format.{key,value}` picks
- * Json / Avro / Protobuf / CloudEvents per key/value — ServerApp.java:152-161,
- * converter instantiation ConvertingEngineBuilder.java:198-234). Here one
- * config string selects the serializer applied at the sink boundary.
- */
+import java.io.ByteArrayOutputStream
+
 /**
  * Registry-header framing variants for the binary wire formats. The
  * reference selects between Confluent-protocol and Apicurio-protocol
@@ -26,58 +25,76 @@ import org.apache.spark.sql.types.StructType
  * The magic byte itself stays per-format (0x00 avro, 0x01 proto — our
  * registry convention); only the id width/interpretation varies.
  */
-object RegistryFraming {
-  val Confluent = "confluent"
-  val Apicurio = "apicurio"
+sealed abstract class RegistryFraming(val name: String, val headerLen: Int)
+    extends Serializable {
+  override def toString: String = name
 
-  def headerLen(framing: String): Int = framing match {
-    case Confluent => 5
-    case Apicurio  => 9
-    case other => throw new IllegalArgumentException(s"unknown registry framing $other")
+  def header(magic: Byte, schemaId: Int): Array[Byte]
+
+  /** the id bytes of a header already checked for length and magic */
+  protected def readId(wire: Array[Byte]): Int
+
+  /** Schema id from a framed record; fails loudly on the wrong magic or a
+    * truncated header (a confluent-framed record read as apicurio would
+    * otherwise yield a garbage id and a misaligned body). */
+  def schemaId(magic: Byte, wire: Array[Byte]): Int = {
+    require(wire.length >= headerLen && wire(0) == magic,
+      s"bad wire header (framing=$name, expected magic=$magic)")
+    readId(wire)
   }
+}
 
-  def header(framing: String, magic: Byte, schemaId: Int): Array[Byte] = framing match {
-    case Confluent =>
+object RegistryFraming {
+  object Confluent extends RegistryFraming("confluent", 5) {
+    def header(magic: Byte, schemaId: Int): Array[Byte] =
       Array(magic, (schemaId >> 24).toByte, (schemaId >> 16).toByte,
         (schemaId >> 8).toByte, schemaId.toByte)
-    case Apicurio =>
+    protected def readId(wire: Array[Byte]): Int =
+      ((wire(1) & 0xff) << 24) | ((wire(2) & 0xff) << 16) |
+        ((wire(3) & 0xff) << 8) | (wire(4) & 0xff)
+  }
+
+  object Apicurio extends RegistryFraming("apicurio", 9) {
+    def header(magic: Byte, schemaId: Int): Array[Byte] = {
       val id = schemaId.toLong
       val out = new Array[Byte](9)
       out(0) = magic
       var i = 0
       while (i < 8) { out(1 + i) = (id >> (56 - 8 * i)).toByte; i += 1 }
       out
-    case other => throw new IllegalArgumentException(s"unknown registry framing $other")
-  }
-
-  /** Schema id from a framed record; fails loudly on the wrong magic or a
-    * truncated header (a confluent-framed record read as apicurio would
-    * otherwise yield a garbage id and a misaligned body). */
-  def schemaId(framing: String, magic: Byte, wire: Array[Byte]): Int = {
-    val len = headerLen(framing)
-    require(wire.length >= len && wire(0) == magic,
-      s"bad wire header (framing=$framing, expected magic=$magic)")
-    framing match {
-      case Confluent =>
-        ((wire(1) & 0xff) << 24) | ((wire(2) & 0xff) << 16) |
-          ((wire(3) & 0xff) << 8) | (wire(4) & 0xff)
-      case _ =>
-        var id = 0L
-        var i = 0
-        while (i < 8) { id = (id << 8) | (wire(1 + i) & 0xffL); i += 1 }
-        require(id >= 0 && id <= Int.MaxValue,
-          s"apicurio globalId $id outside this registry's int id space")
-        id.toInt
+    }
+    protected def readId(wire: Array[Byte]): Int = {
+      var id = 0L
+      var i = 0
+      while (i < 8) { id = (id << 8) | (wire(1 + i) & 0xffL); i += 1 }
+      require(id >= 0 && id <= Int.MaxValue,
+        s"apicurio globalId $id outside this registry's int id space")
+      id.toInt
     }
   }
+
+  val all: Seq[RegistryFraming] = Seq(Confluent, Apicurio)
+}
+
+/**
+ * Format selection (reference F2: `cdcsdk.server.format.{key,value}` picks
+ * Json / Avro / Protobuf / CloudEvents per key/value — ServerApp.java:152-161,
+ * converter instantiation ConvertingEngineBuilder.java:198-234). One value
+ * selects the serializer applied at the sink boundary; `name` is its config
+ * spelling.
+ */
+sealed abstract class WireFormat(val name: String) extends Serializable {
+  override def toString: String = name
 }
 
 object WireFormat {
 
-  val Json = "json"
-  val Avro = "avro"
-  val Proto = "proto"
-  val CloudEvents = "cloudevents"
+  object Json extends WireFormat("json")
+  object CloudEvents extends WireFormat("cloudevents")
+  val Avro: AvroWire.type = AvroWire
+  val Proto: ProtoWire.type = ProtoWire
+
+  val all: Seq[WireFormat] = Seq(Json, Avro, Proto, CloudEvents)
 
   private def jsonEscape(s: String): String = s.flatMap {
     case '"'  => "\\\""
@@ -154,6 +171,15 @@ object WireFormat {
     * exactly this way, MTEngine.java:654-660). */
   def connectSchemaFromJson(json: String): StructType = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def parseStruct(node: com.fasterxml.jackson.databind.JsonNode): StructType = {
+      val fields = scala.collection.mutable.ArrayBuffer
+        .empty[org.apache.spark.sql.types.StructField]
+      node.get("fields").elements().forEachRemaining { f =>
+        fields += org.apache.spark.sql.types.StructField(
+          f.get("field").asText(), parse(f), f.path("optional").asBoolean(true))
+      }
+      StructType(fields.toArray)
+    }
     def parse(node: com.fasterxml.jackson.databind.JsonNode): org.apache.spark.sql.types.DataType = {
       // named LOGICAL types take precedence over the base type
       node.path("name").asText("") match {
@@ -172,14 +198,7 @@ object WireFormat {
         case _ =>
       }
       node.get("type").asText() match {
-        case "struct" =>
-          val fields = scala.collection.mutable.ArrayBuffer
-            .empty[org.apache.spark.sql.types.StructField]
-          node.get("fields").elements().forEachRemaining { f =>
-            fields += org.apache.spark.sql.types.StructField(
-              f.get("field").asText(), parse(f), f.path("optional").asBoolean(true))
-          }
-          org.apache.spark.sql.types.StructType(fields.toArray)
+        case "struct" => parseStruct(node)
         case "array" =>
           val items = node.get("items")
           org.apache.spark.sql.types.ArrayType(parse(items),
@@ -192,11 +211,10 @@ object WireFormat {
           s"unknown connect schema type '$p'"))
       }
     }
-    parse(mapper.readTree(json)) match {
-      case st: StructType => st
-      case other => throw new IllegalArgumentException(
-        s"connect schema block must be a struct, got $other")
-    }
+    val root = mapper.readTree(json)
+    require(root.path("type").asText("") == "struct",
+      s"connect schema block must be a struct, got ${root.path("type")}")
+    parseStruct(root)
   }
 
   /** CloudEvents 1.0 JSON envelope around the payload struct (deterministic:
@@ -214,17 +232,18 @@ object WireFormat {
   /**
    * Serialize `payloadCols` of `df` per the selected format into a `wire`
    * column (string for json/cloudevents, binary for avro/proto), keeping
-   * `keep` columns. The JSON path is a pure codegen'd expression; the binary
-   * formats are per-partition encoders (see AvroWire/ProtoWire).
+   * `keep` columns. Every path is a plain projection: JSON and CloudEvents
+   * through Spark's own expressions, the binary formats through
+   * [[BinaryWire.encode]].
    *
    * `idCol` feeds the CloudEvents `id` attribute (1.0 spec: unique per
    * source) — the source-assigned LSN by default, never a payload column
    * picked by position.
    */
-  def encode(df: DataFrame, format: String, payloadCols: Seq[String], schemaId: Int,
+  def encode(df: DataFrame, format: WireFormat, payloadCols: Seq[String], schemaId: Int,
              keep: Seq[String] = Seq.empty, idCol: String = "lsn",
              schemasEnable: Boolean = false,
-             framing: String = RegistryFraming.Confluent): DataFrame = format match {
+             framing: RegistryFraming = RegistryFraming.Confluent): DataFrame = format match {
     case Json =>
       val payload = to_json(struct(payloadCols.map(col): _*))
       // schemas.enable: wrap as {"schema": <connect schema>, "payload": {...}}
@@ -240,9 +259,7 @@ object WireFormat {
       df.select(keep.map(col) :+
         cloudEvents(struct(payloadCols.map(col): _*), col(idCol),
           "graft.cdc.change").as("wire"): _*)
-    case Avro  => AvroWire.encode(df, payloadCols, schemaId, keep, framing)
-    case Proto => ProtoWire.encode(df, payloadCols, schemaId, keep, framing)
-    case other => throw new IllegalArgumentException(s"unknown wire format $other")
+    case binary: BinaryWire => binary.encode(df, payloadCols, schemaId, keep, framing)
   }
 
   /**
@@ -267,42 +284,155 @@ object WireFormat {
       .reduceOption(graft.cdc.SchemaEvolution.merge)
       .getOrElse(throw new IllegalArgumentException(
         "schemas.enable decode: no embedded schema block found and no registry fallback"))
-    val env = StructType(Seq(
-      org.apache.spark.sql.types.StructField("payload", target)))
-    val alias = freshAlias("_e", keep)
-    df.select(keep.map(col) :+ from_json(col("wire"), env).as(alias): _*)
-      .select(keep.map(col) ++ target.fieldNames.map(n => col(alias)("payload")(n).as(n)): _*)
+    projectFields(df, keep, target, fromJson, Some("payload"))
   }
 
-  /** Name for a decode's intermediate struct column that no `keep` column
-    * has (column names resolve case-insensitively), so a kept column is
-    * never shadowed by the struct or vice versa. */
-  private[formats] def freshAlias(base: String, keep: Seq[String]): String =
-    Iterator.iterate(base)("_" + _).find(n => !keep.exists(_.equalsIgnoreCase(n))).get
+  private val fromJson: StructType => Column = from_json(col("wire"), _)
+
+  /**
+   * `keep` plus `target`'s fields, read out of the struct that `parse`
+   * builds from the wire column (nested under the envelope field `under`
+   * when set). The wire is parsed ONCE into an intermediate struct column:
+   * a multi-referenced non-cheap expression is not duplicated by
+   * CollapseProject (the contract Envelope.decodeJson relies on for
+   * from_json), so the field projection is pure GetStructField. The
+   * struct's name is one no `keep` column has (names resolve
+   * case-insensitively), so neither shadows the other.
+   */
+  private[formats] def projectFields(df: DataFrame, keep: Seq[String], target: StructType,
+                                     parse: StructType => Column,
+                                     under: Option[String] = None): DataFrame = {
+    val alias = Iterator.iterate("_dec")("_" + _)
+      .find(n => !keep.exists(_.equalsIgnoreCase(n))).get
+    val parsed = under.fold(target)(f => StructType(Seq(StructField(f, target))))
+    val root = under.fold(col(alias))(col(alias)(_))
+    df.select(keep.map(col) :+ parse(parsed).as(alias): _*)
+      .select(keep.map(col) ++ target.fieldNames.map(n => root(n).as(n)): _*)
+  }
 
   /** Deserialize a `wire` column back to flat payload columns. */
-  def decode(df: DataFrame, format: String, registry: Map[Int, StructType],
+  def decode(df: DataFrame, format: WireFormat, registry: Map[Int, StructType],
              schemaId: Int, keep: Seq[String] = Seq.empty,
              schemasEnable: Boolean = false,
-             framing: String = RegistryFraming.Confluent): DataFrame = format match {
-    case Json if schemasEnable =>
-      decodeEmbedded(df, keep, registry.get(schemaId))
-    case Json =>
-      val target = registry(schemaId)
-      val alias = freshAlias("_p", keep)
-      df.select(keep.map(col) :+ from_json(col("wire"), target).as(alias): _*)
-        .select(keep.map(col) ++ target.fieldNames.map(n => col(alias)(n).as(n)): _*)
-    case CloudEvents =>
-      val target = registry(schemaId)
-      val env = StructType(Seq(
-        org.apache.spark.sql.types.StructField("data", target)))
-      val alias = freshAlias("_e", keep)
-      df.select(keep.map(col) :+ from_json(col("wire"), env).as(alias): _*)
-        .select(keep.map(col) ++ target.fieldNames.map(n => col(alias)("data")(n).as(n)): _*)
-    case Avro  => AvroWire.decode(df, registry, schemaId, keep, framing)
-    case Proto => ProtoWire.decode(df, registry, schemaId, keep, framing)
-    case other => throw new IllegalArgumentException(s"unknown wire format $other")
+             framing: RegistryFraming = RegistryFraming.Confluent): DataFrame = format match {
+    case Json if schemasEnable => decodeEmbedded(df, keep, registry.get(schemaId))
+    case Json => projectFields(df, keep, registry(schemaId), fromJson)
+    case CloudEvents => projectFields(df, keep, registry(schemaId), fromJson, Some("data"))
+    case binary: BinaryWire => binary.decode(df, registry, schemaId, keep, framing)
   }
+}
+
+/**
+ * A registry-framed binary wire format: one magic byte, the schema id per
+ * the selected [[RegistryFraming]], then the record body. The framing, the
+ * DataFrame entry points and the Catalyst expressions
+ * ([[BinaryEncodeExpr]]/[[BinaryDecodeExpr]]) are defined here once; a
+ * format supplies only its compiled body writer and reader
+ * ([[AvroWire]], [[ProtoWire]]).
+ */
+abstract class BinaryWire(name: String, val magic: Byte) extends WireFormat(name) {
+
+  /** `(wire, writerSchemaId, bodyOffset) => row` */
+  type RecordReader = (Array[Byte], Int, Int) => InternalRow
+
+  /** Body writer for a payload schema, compiled once; it keeps no state
+    * between rows, so one instance serves every thread. */
+  private[formats] def recordWriter(st: StructType): (ByteArrayOutputStream, InternalRow) => Unit
+
+  /** Body reader to `registry`'s `targetSchemaId`, compiled once. It may
+    * cache per-writer-version state, so each thread compiles its own. */
+  private[formats] def recordReader(registry: Map[Int, StructType], targetSchemaId: Int): RecordReader
+
+  def headerSchemaId(wire: Array[Byte],
+                     framing: RegistryFraming = RegistryFraming.Confluent): Int =
+    framing.schemaId(magic, wire)
+
+  /** Serialize `payloadCols` of each row into a `wire` binary column
+    * (header + body); `keep` columns pass through. The encode is one
+    * expression over the payload struct, so the projection stays in the
+    * surrounding whole-stage-codegen'd stage, one virtual call per row. */
+  def encode(df: DataFrame, payloadCols: Seq[String], schemaId: Int,
+             keep: Seq[String] = Seq.empty,
+             framing: RegistryFraming = RegistryFraming.Confluent): DataFrame = {
+    val payloadType = StructType(payloadCols.map(c => df.schema(c)).toArray)
+    val enc = ExprColumnBridge.column(BinaryEncodeExpr(
+      ExprColumnBridge.expression(struct(payloadCols.map(col): _*)),
+      this, payloadType, schemaId, framing))
+    df.select(keep.map(col) :+ enc.as("wire"): _*)
+  }
+
+  /** Decode a `wire` binary column back into flat payload columns; the
+    * header's schema id selects the writer schema from `registry` (our
+    * event schema registry), so records written at different schema
+    * versions decode side by side into `targetSchemaId`'s fields. */
+  def decode(df: DataFrame, registry: Map[Int, StructType], targetSchemaId: Int,
+             keep: Seq[String] = Seq.empty,
+             framing: RegistryFraming = RegistryFraming.Confluent): DataFrame =
+    WireFormat.projectFields(df, keep, registry(targetSchemaId), _ =>
+      ExprColumnBridge.column(BinaryDecodeExpr(
+        ExprColumnBridge.expression(col("wire")), this, registry, targetSchemaId, framing)))
+}
+
+/** Registry-framed binary encode of a payload struct: the header, then
+  * `format`'s compiled body writer over the struct's InternalRow. Codegen
+  * emits a single call into [[encodeRow]]. The scratch buffer is per
+  * thread, so one instance is safe under concurrent evaluation. */
+case class BinaryEncodeExpr(child: Expression, format: BinaryWire, payloadType: StructType,
+                            schemaId: Int, framing: RegistryFraming)
+    extends UnaryExpression {
+  override def dataType: DataType = BinaryType
+  override def prettyName: String = s"${format.name}_encode"
+
+  @transient private lazy val hdr = framing.header(format.magic, schemaId)
+  @transient private lazy val writer = format.recordWriter(payloadType)
+  @transient private lazy val buffer =
+    ThreadLocal.withInitial[ByteArrayOutputStream](() => new ByteArrayOutputStream(256))
+
+  def encodeRow(row: InternalRow): Array[Byte] = {
+    val bos = buffer.get()
+    bos.reset()
+    bos.write(hdr, 0, hdr.length)
+    writer(bos, row)
+    bos.toByteArray
+  }
+
+  override protected def nullSafeEval(v: Any): Any = encodeRow(v.asInstanceOf[InternalRow])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("binEnc", this, classOf[BinaryEncodeExpr].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.encodeRow($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Registry-framed binary decode to a struct of the target schema version:
+  * the header's writer schema id and body offset go to `format`'s compiled
+  * reader. The reader keeps per-writer-version state, so each thread
+  * evaluating this instance compiles its own. */
+case class BinaryDecodeExpr(child: Expression, format: BinaryWire,
+                            registry: Map[Int, StructType], targetSchemaId: Int,
+                            framing: RegistryFraming)
+    extends UnaryExpression {
+  override def dataType: DataType = registry(targetSchemaId)
+  override def prettyName: String = s"${format.name}_decode"
+
+  @transient private lazy val reader =
+    ThreadLocal.withInitial[format.RecordReader](() => format.recordReader(registry, targetSchemaId))
+
+  def decodeWire(wire: Array[Byte]): InternalRow =
+    reader.get()(wire, framing.schemaId(format.magic, wire), framing.headerLen)
+
+  override protected def nullSafeEval(v: Any): Any = decodeWire(v.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("binDec", this, classOf[BinaryDecodeExpr].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.decodeWire($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 /**
@@ -313,12 +443,12 @@ object WireFormat {
  * avro/proto; file sizing via maxRecordsPerFile (the Roller/flush.records
  * equivalent, StorageSinkConnectorConfig.java:31-38).
  */
-class WireSink(spark: SparkSession, root: String, format: String,
+class WireSink(spark: SparkSession, root: String, format: WireFormat,
                maxRecordsPerFile: Long = 0L,
-               keyFormat: String = WireFormat.Json,
+               keyFormat: WireFormat = WireFormat.Json,
                schemasEnable: Boolean = false,
                compression: String = "none",
-               framing: String = RegistryFraming.Confluent) {
+               framing: RegistryFraming = RegistryFraming.Confluent) {
 
   def epochDir(epochId: Long): String = f"$root/epoch=$epochId"
 
@@ -341,7 +471,7 @@ class WireSink(spark: SparkSession, root: String, format: String,
         // (cdcsdk-server-s3/.../CompressionType.java); spark text handles
         // the codec both ways
         writer.option("compression", compression).text(epochDir(epochId))
-      case _ => writer.parquet(epochDir(epochId))
+      case _: BinaryWire => writer.parquet(epochDir(epochId))
     }
     obs.get("rows").asInstanceOf[Long]
   }
@@ -351,7 +481,7 @@ class WireSink(spark: SparkSession, root: String, format: String,
     val raw = format match {
       case WireFormat.Json | WireFormat.CloudEvents =>
         spark.read.text(epochDir(epochId)).withColumnRenamed("value", "wire")
-      case _ => spark.read.parquet(epochDir(epochId))
+      case _: BinaryWire => spark.read.parquet(epochDir(epochId))
     }
     WireFormat.decode(raw, format, registry, schemaId, schemasEnable = schemasEnable,
       framing = framing)

@@ -29,7 +29,8 @@ class ServerConfigSpec extends SparkTestBase {
       "graft.engine.registry.framing" -> "apicurio",
       "graft.engine.max.records.per.file" -> "1000",
       "graft.engine.offset.flush.interval.ms" -> "60000"))
-    assert(cfg.numBuckets == 8 && cfg.format == "proto" && cfg.keyFormat == "avro")
+    assert(cfg.numBuckets == 8 && cfg.format == graft.formats.WireFormat.Proto &&
+      cfg.keyFormat == graft.formats.WireFormat.Avro)
     assert(cfg.schemasEnable && cfg.wireCompression == "gzip" && cfg.maxRecordsPerFile == 1000L)
     assert(cfg.registryFraming == graft.formats.RegistryFraming.Apicurio)
     assert(!cfg.commitPolicy.performCommit(5, 1000))
@@ -39,6 +40,20 @@ class ServerConfigSpec extends SparkTestBase {
     assert(always.commitPolicy.performCommit(1, 0))
     // absent keys keep the defaults
     assert(ServerConfig.engineConfig(Map.empty) == EngineConfig())
+  }
+
+  test("an unknown format or framing value fails at config time, naming its key") {
+    for (key <- Seq("format.value", "format.key", "registry.framing")) {
+      val e = intercept[IllegalArgumentException](
+        ServerConfig.engineConfig(Map(s"graft.engine.$key" -> "protobuf")))
+      assert(e.getMessage.contains(s"graft.engine.$key"), e.getMessage)
+    }
+    // every format and framing spelling parses back to its value
+    for (f <- graft.formats.WireFormat.all)
+      assert(ServerConfig.engineConfig(Map("graft.engine.format.key" -> f.name)).keyFormat == f)
+    for (f <- graft.formats.RegistryFraming.all)
+      assert(ServerConfig.engineConfig(
+        Map("graft.engine.registry.framing" -> f.name)).registryFraming == f)
   }
 
   test("config-driven transform chain equals the code-wired chain") {

@@ -147,6 +147,17 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(m2.epochWatermark == 2L && m2.epochs.isEmpty)
   }
 
+  test("the first epoch into an empty table keeps schema id 0 (cow and mor)") {
+    for (mode <- Seq("cow", "mor")) {
+      val table = new SnapshotTable(spark, tmpDir(s"schema0-$mode"), 2, mode = mode)
+      new CdcEngine(spark, table, EngineConfig(numBuckets = 2))
+        .applyEpoch(EventGen.events(spark, 0, 1000, gen), 0L)
+      val m = table.loadManifest().get
+      assert(m.schemas.keySet == Set("0") && m.currentSchemaId == 0,
+        s"$mode: schemas ${m.schemas.keySet}, current ${m.currentSchemaId}")
+    }
+  }
+
   test("an empty-delta epoch still commits its id (no watermark gap)") {
     val root = tmpDir("emptyepoch")
     val table = new SnapshotTable(spark, root, 2)

@@ -16,7 +16,7 @@ class WireFormatSpec extends SparkTestBase {
   private def payloadType(df: org.apache.spark.sql.DataFrame) =
     StructType(payloadCols.map(df.schema(_)))
 
-  private def roundtrip(format: String): Unit = {
+  private def roundtrip(format: WireFormat): Unit = {
     val ev = events
     val pt = payloadType(ev)
     val wire = WireFormat.encode(ev, format, payloadCols, 0, keep = Seq("lsn"))
@@ -223,6 +223,68 @@ class WireFormatSpec extends SparkTestBase {
     assert(backEmpty.isNullAt(0), "empty repeated field must normalize to NULL")
   }
 
+  // --- golden bytes: one fixed record set through both binary codecs in
+  // both framings. The literals pin the wire layout itself; the round-trip
+  // tests above would pass for any self-consistent encoding.
+
+  private def goldenDf = {
+    val raw = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("n", StructType(Seq(
+        StructField("a", IntegerType, nullable = true),
+        StructField("b", StringType, nullable = false))), nullable = true),
+      StructField("tags", ArrayType(StringType, containsNull = true), nullable = true),
+      StructField("attrs", MapType(StringType, LongType, valueContainsNull = true),
+        nullable = true),
+      StructField("amount", DecimalType(12, 4), nullable = true),
+      StructField("ts_us", LongType, nullable = true),
+      StructField("days", IntegerType, nullable = true),
+      StructField("s", StringType, nullable = true),
+      StructField("x", DoubleType, nullable = true),
+      StructField("l", LongType, nullable = false)))
+    val rows = Seq(
+      org.apache.spark.sql.Row(1L, org.apache.spark.sql.Row(7, "x"), Seq("p", null, "q"),
+        Map("a" -> 1L, "c" -> -7L), new java.math.BigDecimal("-12345.6789"),
+        1709288430123456L, 19783, "h\u00e9llo", 1.5d, -3L),
+      org.apache.spark.sql.Row(2L, null, null, null, null, null, null, null, null,
+        Long.MaxValue),
+      org.apache.spark.sql.Row(3L, org.apache.spark.sql.Row(null, "y"), Seq.empty[String],
+        Map.empty[String, Long], new java.math.BigDecimal("0.0001"), -1L, -351, "",
+        -0.0d, 0L))
+    // temporal columns from their integer forms, independent of any time zone
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), raw)
+      .select(col("id"), col("n"), col("tags"), col("attrs"), col("amount"),
+        timestamp_micros(col("ts_us")).as("ts"), date_from_unix_date(col("days")).as("day"),
+        col("s"), col("x"), col("l"))
+  }
+
+  // bodies of records id 1, 2, 3 (after the registry header)
+  private val goldenAvro = Seq(
+    "02020e0278020602027000020271000204026102020263020d000208f8a432eb0280e7919bd7a5" +
+      "8906028eb502020c68c3a96c6c6f02000000000000f83f05",
+    "0000000000000000feffffffffffffffff01",
+    "0200027902000200020201020102bd05020002000000000000008000")
+  private val goldenProto = Seq(
+    "0a05080e1201781201701201711a050a016110021a050a0163100d2204f8a432eb2880e7919bd7" +
+      "a58906308eb5023a0668c3a96c6c6f41000000000000f83f4805",
+    "48feffffffffffffffff01",
+    "0a03120179220101280130bd053a004100000000000000804800")
+
+  test("golden bytes: avro and proto wire layout in both framings") {
+    val df = goldenDf
+    val cols = df.columns.toSeq.tail
+    def hex(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02x").mkString
+    for ((framing, idHex) <- Seq(RegistryFraming.Confluent -> "00000005",
+        RegistryFraming.Apicurio -> "0000000000000005")) {
+      val avro = AvroWire.encode(df, cols, 5, keep = Seq("id"), framing = framing)
+        .orderBy("id").select("wire").as[Array[Byte]].collect().toSeq.map(hex)
+      val proto = ProtoWire.encode(df, cols, 5, keep = Seq("id"), framing = framing)
+        .orderBy("id").select("wire").as[Array[Byte]].collect().toSeq.map(hex)
+      assert(avro == goldenAvro.map("00" + idHex + _), s"avro $framing")
+      assert(proto == goldenProto.map("01" + idHex + _), s"proto $framing")
+    }
+  }
+
   // --- temporal / decimal / map wire types (reference perf schema carries
   // timestamptz + jsonb — perf/workloads/iot/schema.sql:4-17; the Connect
   // converters ship them as logical types, ConvertingEngineBuilder.java:198-234)
@@ -259,6 +321,44 @@ class WireFormatSpec extends SparkTestBase {
     col("amount").cast("string").as("amount_s"),
     array_sort(map_keys(col("attrs"))).as("ks"),
     col("attrs")("a").as("va"), col("attrs")("c").as("vc"))
+
+  test("one shared encode and decode expression evaluated from 4 threads at once") {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    val ev = events
+    val v0 = payloadType(ev)
+    // decode at v1 from v0 records: avro's library-reader fallback and
+    // proto's per-writer-version parser both run
+    val v1 = StructType(v0.fields :+ StructField("stars", IntegerType, nullable = true))
+    val rows = ev.select(struct(payloadCols.map(col): _*)).queryExecution.toRdd
+      .map(_.copy()).collect().toSeq
+    val toScala = CatalystTypeConverters.createToScalaConverter(v1)
+    for (format <- Seq(WireFormat.Avro, WireFormat.Proto)) {
+      val enc = BinaryEncodeExpr(BoundReference(0, v0, nullable = false), format, v0, 0,
+        RegistryFraming.Confluent)
+      val dec = BinaryDecodeExpr(BoundReference(0, BinaryType, nullable = false), format,
+        Map(0 -> v0, 1 -> v1), 1, RegistryFraming.Confluent)
+      def run(r: InternalRow) = {
+        val wire = enc.eval(r).asInstanceOf[Array[Byte]]
+        (wire.toSeq, toScala(dec.eval(InternalRow(wire))))
+      }
+      val want = rows.map(run)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        val results = (0 until 4).map { t =>
+          pool.submit(new java.util.concurrent.Callable[Int] {
+            // each thread starts at its own offset, so they interleave
+            def call(): Int = (0 until 3 * rows.size).count { k =>
+              val i = (k + t * rows.size / 4) % rows.size
+              scala.util.Try(run(rows(i))).toOption != Some(want(i))
+            }
+          })
+        }.map(_.get())
+        assert(results.sum == 0,
+          s"$format: ${results.sum} concurrent results differ from single-threaded eval")
+      } finally pool.shutdown()
+    }
+  }
 
   test("avro temporal/decimal/map round trip (logical types, fast-path reader)") {
     val df = richDf

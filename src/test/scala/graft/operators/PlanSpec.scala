@@ -109,7 +109,7 @@ class PlanSpec extends SparkTestBase {
   // This holds only while Project keeps its child's ordering and no rule
   // drops the non-root Sort, so a Spark upgrade must keep these green.
   Seq(
-    "cdc_roundtrip_avro" -> "AvroDecodeExpr",
+    "cdc_roundtrip_avro" -> "BinaryDecodeExpr",
     "cdc_envelope_before" -> "JsonToStructs",
     "doc_scrub" -> "RegExpReplace"
   ).foreach { case (name, expensive) =>
