@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
  *   snapshot table -> lineage append -> (manifest rename = offset commit)
  *
  * One epoch == one micro-batch == one offset-commit unit, and every apply
- * path ends in the same commit step (`commitEpoch`). Exactly-once comes from
- * the table's (bucket, epochId) fencing; resume comes from the manifest
- * ledger: `merge` checks it before any Spark job, so a committed epoch is
- * skipped entirely — the analogue of the reference's offset restore
- * skipping `id <= lastId`, SimpleSourceConnector.java:143-157.
+ * path ends in the same commit step (`commitEpoch`). Exactly-once and
+ * resume both come from the manifest's epoch ledger: `merge` checks it
+ * before any Spark job, so a committed epoch is skipped entirely — the
+ * analogue of the reference's offset restore skipping `id <= lastId`,
+ * SimpleSourceConnector.java:143-157.
  *
  * Scale notes (10^10 events / 1000 executors):
  *  - the raw stream is never materialized: each epoch's events are generated
@@ -26,7 +26,13 @@ import org.apache.spark.sql.functions._
  *    before the shuffle; explicit salting available via `saltBuckets`);
  *  - MERGE shuffles only delta-side data (anti-join broadcasts the delta key
  *    set under the threshold) and rewrites only touched buckets;
- *  - AQE is expected on (skew-join splits + partition coalescing).
+ *  - AQE is expected on (skew-join splits + partition coalescing);
+ *  - an epoch's fixed cost does not grow with the epoch count: the LSN
+ *    range reaches the plan as data, never as a literal in generated code,
+ *    so an epoch of a shape already seen compiles no class; and the deduped
+ *    delta is materialized once, by one job that also computes its
+ *    per-bucket stats, with the epoch's later queries planned over those
+ *    rows — 6 Spark jobs for a copy-on-write epoch on either apply path.
  */
 final case class EngineConfig(
     numBuckets: Int = 32,
@@ -108,7 +114,7 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
     * MTEngine.java:900-905). Transient faults (IO, fetch, task failures
     * surfacing as SparkException) retry the SAME epoch at the driver:
     * nothing was committed (the manifest rename is the last step), so the
-    * deterministic re-evaluation plus (bucket, epochId) fencing makes the
+    * deterministic re-evaluation plus the epoch-ledger fence makes the
     * retry exactly-once, not just at-least-once. Non-transient errors
     * propagate. */
   def applyEpochWithRetry(events: DataFrame, epochId: Long, maxAttempts: Int = 3): Long = {
@@ -298,8 +304,11 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
     * ~6x less than one over full after-images (`applyEpoch`, kept for
     * sources that cannot re-read by LSN). Queued snapshot signals
     * activate at the next epoch boundary and interleave one chunk per
-    * stream epoch (remaining chunks drain at the end). */
-  def replayGenerated(lo: Long, hi: Long, epochs: Int, gen: GenConfig = GenConfig()): ReplayStats = {
+    * stream epoch (remaining chunks drain at the end). `onEpoch` is called
+    * after each stream epoch, and the snapshot chunk applied after it, with
+    * the epoch id and its applied rows (-1 if fenced). */
+  def replayGenerated(lo: Long, hi: Long, epochs: Int, gen: GenConfig = GenConfig(),
+                      onEpoch: (Long, Long) => Unit = (_, _) => ()): ReplayStats = {
     require(epochs > 0 && hi > lo)
     val chunk = math.max(1L, (hi - lo + epochs - 1) / epochs)
     var applied = 0L
@@ -319,6 +328,7 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
       i += 1
       maybeActivateSnapshot()
       advanceSnapshot(cursor, gen)
+      onEpoch(epochId, n)
     }
     // drain remaining snapshot chunks AND any still-queued signals
     while ({ maybeActivateSnapshot(); advanceSnapshot(cursor, gen) }) {}

@@ -1,6 +1,12 @@
 package graft.cdc
 
+import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /**
  * spark-submit entry point for a full CDC replay — the equivalent of the
@@ -12,8 +18,10 @@ import org.apache.spark.sql.functions._
  *
  * The job is restartable: re-running with the same tableRoot resumes from
  * the manifest ledger (committed epochs fence to no-ops), and prints
- * per-run + cumulative totals. Exit code 0 iff the final state matches the
- * generator oracle by per-row sha256.
+ * per-run + cumulative totals. Each epoch prints the Spark jobs it started
+ * and the generated classes it compiled, so a per-epoch cost that creeps
+ * back in shows without a probe. Exit code 0 iff the final state matches
+ * the generator oracle by per-row sha256.
  */
 object ReplayJob {
   def main(args: Array[String]): Unit = {
@@ -51,8 +59,13 @@ object ReplayJob {
     val engine = new CdcEngine(spark, table,
       base.copy(numBuckets = buckets, broadcastThresholdBytes = bcast))
 
+    val counters = new WorkCounters(spark.sparkContext)
     val t0 = System.nanoTime()
-    val stats = engine.replayGenerated(0, numEvents, epochs, gen)
+    val stats = engine.replayGenerated(0, numEvents, epochs, gen, onEpoch = { (epochId, n) =>
+      val (jobs, compiled, wall) = counters.take()
+      println(f"[epoch] id=$epochId ${if (n < 0) "fenced" else s"rows=$n"} jobs=$jobs " +
+        f"compiled=$compiled wall=$wall%.2fs")
+    })
     val secs = (System.nanoTime() - t0) / 1e9
 
     val (rows, bytes) = engine.totals()
@@ -73,5 +86,38 @@ object ReplayJob {
       (if (diff == 0) "MATCH" else "MISMATCH"))
     spark.stop()
     if (diff != 0) sys.exit(1)
+  }
+}
+
+/** Spark jobs started, generated classes compiled and wall seconds since
+  * the last [[take]] — the counters the tests use: a listener's job-start
+  * events and `CodegenMetrics`' compile count. Listener events arrive
+  * asynchronously, so `take` first runs a marker job and waits for its
+  * start event; every job before it has been counted by then. */
+private final class WorkCounters(sc: SparkContext) {
+  private val markKey = "graft.replay.marker"
+  private val jobs = new AtomicInteger()
+  private val markers = new LinkedBlockingQueue[String]()
+  sc.addSparkListener(new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(markKey))) match {
+        case Some(m) => markers.put(m)
+        case None    => jobs.incrementAndGet()
+      }
+  })
+  private def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private var last = (0, compiled, System.nanoTime())
+  private var marks = 0
+
+  def take(): (Int, Long, Double) = {
+    val t = System.nanoTime()
+    marks += 1
+    sc.setLocalProperty(markKey, marks.toString)
+    try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(markKey, null)
+    require(markers.poll(60, TimeUnit.SECONDS) == marks.toString, "marker job not seen")
+    val now = (jobs.get(), compiled, System.nanoTime())
+    val out = (now._1 - last._1, now._2 - last._2, (t - last._3) / 1e9)
+    last = now
+    out
   }
 }

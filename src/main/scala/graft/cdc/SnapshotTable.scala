@@ -3,13 +3,17 @@ package graft.cdc
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, InternalRowsBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import java.nio.charset.StandardCharsets
+import scala.util.control.NonFatal
 
 /**
  * Keyed snapshot table with Iceberg-style snapshot isolation, built from
@@ -30,9 +34,9 @@ import java.nio.charset.StandardCharsets
  * between rewriting a 100 TB table per epoch and rewriting only the deltas'
  * working set.
  *
- * Exactly-once: the manifest embeds the commit ledger — per-bucket
- * `lastEpoch` (partition-level fencing, north rule's (partitionId, epochId))
- * plus the set of committed epoch ids. Data files are written first, the
+ * Exactly-once: the manifest embeds the commit ledger — the set of
+ * committed epoch ids, which fences a re-delivered epoch, plus each bucket's
+ * `lastEpoch`, always one of those ids. Data files are written first, the
  * manifest rename is the single atomic decision (same contract as the
  * reference's only transactional sink, the Pravega txn consumer:
  * cdcsdk-server-pravega/.../PravegaChangeConsumer.java:117-167 — stage all,
@@ -58,6 +62,13 @@ import java.nio.charset.StandardCharsets
  * [[writerPartitioned]]). Every write under the root (bucket data, merge-on-
  * read deltas, compaction, lineage, the manifest, signals, dead letters) goes
  * through [[NoForkLocalFileSystem]] on `file:` paths, so none forks `chmod`.
+ *
+ * Merges: an epoch's delta is materialized once. One Spark job runs its plan
+ * into a persisted RDD of rows (lineage kept, so a lost block is recomputed)
+ * and computes the per-bucket stats — LSN range, rows, bytes — in the same
+ * pass; there is no columnar cache and no separate stats query. The epoch's
+ * later queries plan over those rows, and [[merge]] unpersists them before
+ * it returns.
  *
  * @param mode "cow" (copy-on-write: each epoch rewrites touched buckets —
  *             cheapest reads) or "mor" (merge-on-read: each epoch appends its
@@ -234,9 +245,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
   private def commitManifest(m: Manifest): Unit = {
     val target = manifestFile(m.version)
     if (fs.exists(target)) {
-      if (loadManifestVersion(m.version).nonEmpty)
-        throw new IllegalStateException(s"manifest version ${m.version} at $root was " +
-          "committed by another writer; this writer's staged epochs are stale")
+      if (loadManifestVersion(m.version).nonEmpty) throw staleConflict(m.version)
       // a crashed earlier attempt at this same (never-committed) version
       // left an unparseable file — garbage by construction, clear it
       fs.delete(target, false)
@@ -249,6 +258,9 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
       throw new IllegalStateException(s"manifest commit failed for version ${m.version}")
     manifestVersions().drop(3).foreach(v => fs.delete(manifestFile(v), false))
   }
+
+  private def staleConflict(version: Long) = new IllegalStateException(s"manifest version " +
+    s"$version at $root was committed by another writer; this writer's staged epochs are stale")
 
   def currentSchema(): StructType = schemaOf(effectiveManifest())
 
@@ -370,6 +382,14 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
    * delete rows with op = 'd'. `delta` must be one-row-per-key (run
    * Dedup.lastPerKey first) and carry `op` + the key/payload columns.
    *
+   * Materialization: ONE Spark job runs the delta's plan, keeps its rows in
+   * a persisted RDD (memory, spilling to disk; its lineage is kept, so a
+   * lost block is recomputed) and computes the per-bucket stats in the same
+   * pass over them. Every later query of the epoch (broadcast keys, upserts,
+   * the merge-on-read delta write) plans over that RDD as its leaf, not over
+   * the delta's dedup and generator plan again. The RDD is unpersisted
+   * before `merge` returns.
+   *
    * Join strategy: the surviving-rows side is `current LEFT ANTI JOIN
    * deltaKeys` — with a small delta Spark broadcasts the key set, so the
    * 100 TB snapshot side is NEVER shuffled; upserts are a cheap union after.
@@ -378,8 +398,9 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
    *
    * Returns per-bucket merge stats. Idempotent: the fence runs first, so a
    * re-delivered committed (or staged) epoch returns `applied = false`
-   * before any Spark job starts; buckets whose ledger entry already records
-   * `epochId` are skipped (fencing on (bucket, epochId)).
+   * before any Spark job starts. A writer whose staged epochs another writer
+   * has since overtaken gets its conflict here too, before any file is
+   * written.
    */
   def merge(delta: DataFrame, epochId: Long, broadcastThresholdBytes: Long = 256L << 20,
             commit: Boolean = true): MergeResult = {
@@ -388,6 +409,16 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     val prev = effectiveManifest()
     if (prev.containsEpoch(epochId))
       return MergeResult(epochId, applied = false, Seq.empty)
+    // a bucket's lastEpoch is always an epoch its manifest records, so no
+    // bucket can hold this epoch yet; one that does means a corrupt ledger
+    prev.buckets.collectFirst { case (b, st) if !prev.containsEpoch(st.lastEpoch) => (b, st.lastEpoch) }
+      .foreach { case (b, e) => throw new IllegalStateException(s"bucket $b of manifest " +
+        s"v${prev.version} at $root records epoch $e, which the manifest's ledger does not") }
+    // building on staged epochs: another writer that has committed their
+    // version meanwhile makes them stale — fail before this epoch's data
+    // directory and lineage overwrite that writer's files
+    if (hasPending) manifestVersions().takeWhile(_ >= prev.version)
+      .find(loadManifestVersion(_).nonEmpty).foreach(v => throw staleConflict(v))
 
     // stage the next manifest, built whole from `prev`; commit = atomic
     // manifest rename. Its version is fixed here: the staged one's while
@@ -407,52 +438,21 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
     val schemaChanged = mergedSchema != tableSchema
 
     val keyed = delta.withColumn("bucket", bucketCol)
-    // the delta feeds three passes (stats, anti-join keys, upserts): cache
-    // it once (deserialized, spilling to disk under memory pressure)
-    keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (deltaRdd, stats) = materialize(keyed, epochId)
     try {
-      // ONE action computes everything the driver needs: affected buckets,
-      // delta size (broadcast decision), fencing inputs, lineage rows and
-      // the ledger update. ≤ numBuckets rows come back.
-      val bytesCol =
-        if (delta.columns.contains("content")) sum(octet_length(coalesce(col("content"), lit(""))))
-        else lit(0L)
-      val keyBytesCol = Model.keyCols
-        .map(k => octet_length(coalesce(col(k).cast("string"), lit(""))))
-        .reduce(_ + _)
-      val stats = keyed.groupBy("bucket").agg(
-          min("lsn").as("firstLsn"), max("lsn").as("maxLsn"),
-          count(lit(1)).as("rows"), bytesCol.cast("long").as("bytes"),
-          sum(keyBytesCol).cast("long").as("keyBytes"))
-        .collect()
-        .map(r => BucketMergeStat(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5)))
-        .toSeq
-      // broadcast decision is BYTE-based on what actually ships: the key
-      // columns (plus per-row struct overhead), not a row count — 4M rows of
-      // two long strings can be hundreds of MB
-      val deltaKeyBytes = stats.map(s => s.keyBytes + 16 * s.rows).sum
-      val affected = stats.map(_.bucket).toSet
-      // (bucket, epochId) fence: skip buckets whose ledger already records
-      // THIS epoch. Equality, not >=: epoch ids need not be monotone in
-      // application order (incremental-snapshot chunk epochs interleave with
-      // smaller stream epoch ids); cross-epoch ordering is the manifest's
-      // containsEpoch job, per-bucket the fence is exact re-delivery.
-      val fenced = prev.buckets.toSeq
-        .filter { case (b, st) => affected.contains(b.toInt) && st.lastEpoch == epochId }
-        .map(_._1.toInt).toSet
-      val toMerge = affected -- fenced
-      if (affected.isEmpty) {
+      val rows = InternalRowsBridge.dataFrame(spark, deltaRdd, keyed.schema)
+      if (stats.isEmpty) {
         // an EMPTY epoch still commits its id: leaving a gap would stop the
         // epoch watermark forever and regrow the O(all-epochs) recent set
         // (a destination with zero routed rows this epoch hits this)
         stage(prev)
         return MergeResult(epochId, applied = true, Seq.empty)
       }
-      if (toMerge.isEmpty) return MergeResult(epochId, applied = false, Seq.empty)
-      val mergedStats = stats.filter(s => toMerge.contains(s.bucket))
-
-      val deltaWithOp = keyed.filter(col("bucket").isInCollection(toMerge))
+      // broadcast decision is BYTE-based on what actually ships: the key
+      // columns (plus per-row struct overhead), not a row count — 4M rows of
+      // two long strings can be hundreds of MB
+      val deltaKeyBytes = stats.map(s => s.keyBytes + 16 * s.rows).sum
+      val touched = stats.map(_.bucket).toSet
       val snapDir = if (mode == "mor") s"data/delta-$epochId" else s"data/snap-$epochId"
 
       if (mode == "mor") {
@@ -460,21 +460,21 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
         // tombstones); no base read, no join — O(|delta|) write per epoch.
         // Readers reconcile; compaction amortizes read amplification.
         writeBuckets(
-          SchemaEvolution.alignTo(deltaWithOp, StructType(withBucket(mergedSchema).fields ++ lsnOp)),
-          toMerge.size, snapDir)
+          SchemaEvolution.alignTo(rows, StructType(withBucket(mergedSchema).fields ++ lsnOp)),
+          touched.size, snapDir)
       } else {
         // copy-on-write: rewrite touched buckets = survivors ∪ upserts.
         // The surviving-rows side is current LEFT ANTI JOIN delta keys —
         // with a small delta the key set broadcasts and the snapshot side
         // never shuffles.
-        val current = SchemaEvolution.alignTo(readWith(prev, Some(toMerge)), withBucket(mergedSchema))
-        val keys = deltaWithOp.select(Model.keyCols.map(col): _*)
+        val current = SchemaEvolution.alignTo(readWith(prev, Some(touched)), withBucket(mergedSchema))
+        val keys = rows.select(Model.keyCols.map(col): _*)
         val keysMaybeBroadcast =
           if (deltaKeyBytes <= broadcastThresholdBytes) broadcast(keys) else keys
         val survivors = current.join(keysMaybeBroadcast, Model.keyCols, "left_anti")
         val upserts = SchemaEvolution.alignTo(
-          deltaWithOp.filter(col("op") =!= "d"), withBucket(mergedSchema))
-        writeBuckets(survivors.unionByName(upserts), toMerge.size, snapDir)
+          rows.filter(col("op") =!= "d"), withBucket(mergedSchema))
+        writeBuckets(survivors.unionByName(upserts), touched.size, snapDir)
       }
 
       // lineage rows (partition, firstLSN, lastLSN, rowCount, bytes) from the
@@ -482,7 +482,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
       // committed epoch always has its lineage (a crash in between leaves
       // orphan lineage that the epoch re-run simply overwrites)
       import spark.implicits._
-      writer(mergedStats.map(s =>
+      writer(stats.map(s =>
           Model.LineageRow(epochId, s.bucket, s.firstLsn, s.maxLsn, s.rows, s.bytes))
         .toDF()
         .coalesce(1))
@@ -495,7 +495,7 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
           val next = prev.schemas.keys.map(_.toInt).max + 1
           (prev.schemas + (next.toString -> mergedSchema.json), next)
         }
-      val epochBuckets = mergedStats.map { s =>
+      val epochBuckets = stats.map { s =>
         val key = s.bucket.toString
         val old = prev.buckets.get(key)
         // resume point must be monotone: out-of-LSN-order epochs (e.g.
@@ -514,8 +514,28 @@ class SnapshotTable(val spark: SparkSession, val root: String, val numBuckets: I
       val next = stage(prev.copy(schemas = schemas, currentSchemaId = schemaId,
         buckets = prev.buckets ++ epochBuckets))
       if (mode == "mor" && commit) compactIfNeeded(next)
-      MergeResult(epochId, applied = true, mergedStats)
-    } finally keyed.unpersist()
+      MergeResult(epochId, applied = true, stats)
+    } finally deltaRdd.unpersist(blocking = false)
+  }
+
+  /** Run `keyed`'s plan once: its rows land in a persisted RDD, returned
+    * with their per-bucket stats (ordered by bucket), computed from the
+    * same rows in the same job. The caller unpersists the RDD. */
+  private def materialize(keyed: DataFrame, epochId: Long): (RDD[InternalRow], Seq[BucketMergeStat]) = {
+    val schema = keyed.schema
+    val ord = schema.fieldNames.zipWithIndex.toMap
+    val content = ord.get("content").map(i => (i, schema(i).dataType))
+    val keys = Model.keyCols.map(k => (ord(k), schema(k).dataType))
+    val (bucket, lsn) = (ord("bucket"), ord("lsn"))
+    InternalRowsBridge.withRows(keyed, s"merge epoch $epochId: materialize delta") { it =>
+      val rows = it.map(_.copy()).setName(s"delta of epoch $epochId")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val parts = spark.sparkContext.runJob(rows,
+          (rs: Iterator[InternalRow]) => bucketStats(rs, bucket, lsn, content, keys))
+        (rows, parts.flatten.groupBy(_.bucket).values.map(_.reduce(_ combine _)).toSeq.sortBy(_.bucket))
+      } catch { case NonFatal(e) => rows.unpersist(blocking = false); throw e }
+    }
   }
 
   /** Compact the buckets of the just-committed `m` whose stacked delta
@@ -644,6 +664,41 @@ object SnapshotTable {
   }
 
   case class BucketMergeStat(bucket: Int, firstLsn: Long, maxLsn: Long, rows: Long, bytes: Long,
-                             keyBytes: Long = 0L)
+                             keyBytes: Long = 0L) {
+    /** Stats of this bucket's rows together with `o`'s (same bucket). */
+    def combine(o: BucketMergeStat): BucketMergeStat =
+      BucketMergeStat(bucket, math.min(firstLsn, o.firstLsn), math.max(maxLsn, o.maxLsn),
+        rows + o.rows, bytes + o.bytes, keyBytes + o.keyBytes)
+  }
+
+  /** Per-bucket stats of one partition of delta rows: LSN range (nulls
+    * skipped), row count, content bytes and key bytes (the UTF-8 length of
+    * each value as a string, 0 for null), by the ordinals of the `bucket`,
+    * `lsn`, `content` (if present) and key columns. */
+  private def bucketStats(rows: Iterator[InternalRow], bucket: Int, lsn: Int,
+                          content: Option[(Int, DataType)],
+                          keys: Seq[(Int, DataType)]): Seq[BucketMergeStat] = {
+    // per bucket: firstLsn, maxLsn, rows, bytes, keyBytes
+    val acc = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+    rows.foreach { r =>
+      val a = acc.getOrElseUpdate(r.getInt(bucket), Array(Long.MaxValue, Long.MinValue, 0L, 0L, 0L))
+      if (!r.isNullAt(lsn)) {
+        val l = r.getLong(lsn)
+        a(0) = math.min(a(0), l); a(1) = math.max(a(1), l)
+      }
+      a(2) += 1
+      content.foreach { case (i, t) => a(3) += octets(r, i, t) }
+      keys.foreach { case (i, t) => a(4) += octets(r, i, t) }
+    }
+    acc.map { case (b, a) => BucketMergeStat(b, a(0), a(1), a(2), a(3), a(4)) }.toSeq
+  }
+
+  /** Byte length of a value as Spark's `octet_length(cast(v as string))`. */
+  private def octets(r: InternalRow, i: Int, t: DataType): Long =
+    if (r.isNullAt(i)) 0L
+    else t match {
+      case StringType => r.getUTF8String(i).numBytes
+      case other => r.get(i, other).toString.getBytes(StandardCharsets.UTF_8).length
+    }
   case class MergeResult(epochId: Long, applied: Boolean, stats: Seq[BucketMergeStat])
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
  * through the same exactly-once epoch path as the batch engine.
  *
  * Offsets: Spark's streaming checkpoint stores WHICH files each micro-batch
- * contained; the table manifest's (bucket, epochId) ledger makes a
+ * contained; the table manifest's epoch ledger makes a
  * re-delivered batch (checkpoint replay after crash) a no-op. Together these
  * give end-to-end exactly-once — the strengthened version of the reference's
  * at-least-once `markProcessed`/offset-flush contract
@@ -86,7 +86,7 @@ object StreamingCdc {
           // overwrite the epoch-keyed DLQ dir, never append: a checkpoint
           // replay re-delivers the batch (same epochId) and an append would
           // duplicate the dead letters — this is the DLQ's analogue of the
-          // main table's (bucket, epochId) fencing
+          // main table's epoch-ledger fencing
           if (!bad.isEmpty)
             engine.table.writer(bad.select("key", "value")).mode("overwrite")
               .parquet(s"$deadLetterDir/epoch=$epochId")

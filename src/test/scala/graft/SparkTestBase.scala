@@ -34,6 +34,15 @@ abstract class SparkTestBase extends AnyFunSuite {
   /** Number of Spark jobs `body` starts. */
   def jobsDuring(body: => Unit): Int = observe(body)._1
 
+  /** Number of classes Spark's code generator compiles while `body` runs;
+    * a class whose source is already in its cache is not compiled again. */
+  def compilesDuring(body: => Unit): Long = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
+  }
+
   /** The tasks of the jobs `body` starts, as their task-end events. */
   def tasksDuring(body: => Unit): Seq[org.apache.spark.scheduler.SparkListenerTaskEnd] =
     observe(body)._2

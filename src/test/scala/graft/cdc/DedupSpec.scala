@@ -62,4 +62,24 @@ class DedupSpec extends SparkTestBase {
     val snap = EventGen.events(spark, 0, 100, GenConfig(snapshotLsn = 100))
     assert(snap.select("op").distinct().as[String].collect().toSet == Set("r"))
   }
+
+  test("generator rows are pinned: count and xor of row hashes for one fixed range") {
+    // the oracle runs the same generator, so only fixed fingerprints can
+    // show that a rewrite of the generator still emits the same rows
+    val g = GenConfig(numKeys = 4000, hotKeys = 8, snapshotLsn = 2000)
+    def fingerprint(df: org.apache.spark.sql.DataFrame) = {
+      val r = df.agg(count(lit(1)), bit_xor(xxhash64(df.columns.map(col).toSeq: _*))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val events = EventGen.events(spark, 1000, 6000, g)
+    assert(events.columns.toSeq ==
+      Seq("lsn", "op", "repo", "path", "commit", "lang", "content", "schemaId", "ts_ms"))
+    assert(fingerprint(events) == ((5000L, 4224813891398812283L)))
+    assert(fingerprint(EventGen.events(spark, 1000, 6000, g, numSlices = 3)) ==
+      ((5000L, 4224813891398812283L)))
+    val skeleton = EventGen.keySkeleton(spark, 1000, 6000, g)
+    assert(skeleton.columns.toSeq == Seq("lsn", "key"))
+    assert(fingerprint(skeleton) == ((5000L, 1020591924034982702L)))
+    assert(fingerprint(EventGen.events(spark, 0, 50000)) == ((50000L, -3034286114416665947L)))
+  }
 }

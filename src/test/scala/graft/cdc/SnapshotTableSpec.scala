@@ -214,14 +214,22 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(reopened.isCommitted(0L) && reopened.isCommitted(1L))
   }
 
+  private def delta(lo: Long, hi: Long) =
+    Dedup.lastPerKey(EventGen.events(spark, lo, hi, gen), Model.keyCols, "lsn")
+  private def digests(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("repo"), col("path"), sha2(coalesce(col("content"), lit("")), 256))
+
+  /** `table` reads exactly the oracle state of LSNs [0, hi). */
+  private def assertReads(table: SnapshotTable, hi: Long): Unit = {
+    val want = digests(EventGen.finalState(spark, 0, hi, gen))
+    val got = digests(table.read())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
   test("a stale writer's commit conflicts instead of replacing another writer's manifest") {
     val root = tmpDir("twowriters")
     val a = new SnapshotTable(spark, root, 4)
     val b = new SnapshotTable(spark, root, 4)
-    def delta(lo: Long, hi: Long) =
-      Dedup.lastPerKey(EventGen.events(spark, lo, hi, gen), Model.keyCols, "lsn")
-    def digests(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("repo"), col("path"), sha2(coalesce(col("content"), lit("")), 256))
     // B stages epoch 1 on the empty table, then A commits epoch 0 first;
     // both touch every bucket (400 keys over 4 buckets)
     b.merge(delta(3000, 6000), 1L, commit = false)
@@ -233,8 +241,46 @@ class SnapshotTableSpec extends SparkTestBase {
     val fresh = new SnapshotTable(spark, root, 4)
     assert(fresh.loadManifest().get == committed)
     assert(fresh.isCommitted(0L) && !fresh.isCommitted(1L))
-    val want = digests(EventGen.finalState(spark, 0, 3000, gen))
-    val got = digests(fresh.read())
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assertReads(fresh, 3000)
+  }
+
+  test("a stale writer's merge conflicts before it overwrites another writer's files") {
+    val root = tmpDir("stalemerge")
+    val a = new SnapshotTable(spark, root, 4)
+    val b = new SnapshotTable(spark, root, 4)
+    // B stages epoch 5, A commits epoch 0, then B merges its own epoch 0:
+    // both would write data/snap-0 and lineage/epoch=0
+    b.merge(delta(3000, 6000), 5L, commit = false)
+    a.merge(delta(0, 3000), 0L)
+    val committed = a.loadManifest().get
+    var ex: IllegalStateException = null
+    val jobs = jobsDuring { ex = intercept[IllegalStateException](b.merge(delta(6000, 9000), 0L)) }
+    assert(ex.getMessage.contains(s"manifest version ${committed.version}"), ex.getMessage)
+    assert(jobs == 0, s"the conflicting merge ran $jobs jobs")
+    // A's v0 still reads A's rows, and its lineage still covers A's LSNs
+    val fresh = new SnapshotTable(spark, root, 4)
+    assert(fresh.loadManifest().get == committed)
+    assertReads(fresh, 3000)
+    val lineage = spark.read.parquet(s"$root/lineage/epoch=0").agg(max("lastLSN")).head().getLong(0)
+    assert(lineage < 3000L, s"lineage of epoch 0 records LSN $lineage")
+  }
+
+  test("a bucket that records an epoch its manifest's ledger lacks fails the merge") {
+    val root = tmpDir("badledger")
+    val table = new SnapshotTable(spark, root, 2)
+    table.merge(delta(0, 1000), 0L)
+    // rewrite the manifest with its ledger emptied: its buckets still
+    // record epoch 0, which it no longer does
+    val m = table.loadManifest().get
+    val name = f"manifest-v${m.version}%020d.json"
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, name),
+      SnapshotTable.mapper.writeValueAsBytes(m.copy(epochs = Seq.empty, epochWatermark = -1L)))
+    // its checksum no longer matches, and a bad checksum reads as no manifest
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, s".$name.crc"))
+    assert(table.loadManifest().get.epochWatermark == -1L)
+    var ex: IllegalStateException = null
+    val jobs = jobsDuring { ex = intercept[IllegalStateException](table.merge(delta(1000, 2000), 0L)) }
+    assert(ex.getMessage.contains("records epoch 0"), ex.getMessage)
+    assert(jobs == 0, s"the refused merge ran $jobs jobs")
   }
 }
