@@ -153,8 +153,13 @@ class CdcEngine(spark: SparkSession, val table: SnapshotTable, conf: EngineConfi
   def applyEpochLateMat(lo: Long, hi: Long, epochId: Long, gen: GenConfig,
                         schemaId: Int = 0): Long = {
     // phase 1 on the pure-numeric (key, lsn) skeleton: no string allocation,
-    // 16-byte shuffle rows, primitive-typed max aggregation
+    // 16-byte shuffle rows, primitive-typed max aggregation. The shuffle has
+    // one partition per core: AQE sizes a shuffle's reducers by its bytes,
+    // and 16-byte rows would leave one or two tasks to re-materialize every
+    // winner's payload. The skeleton so skips its map-side combine: a hot
+    // key's events meet in one reducer, which only compares longs.
     val winners = EventGen.keySkeleton(spark, lo, hi, gen)
+      .repartition(spark.sparkContext.defaultParallelism, col("key"))
       .groupBy(col("key")).agg(max(col("lsn")).as("lsn"))
     commitEpoch(EventGen.eventsFromLsns(winners.select("lsn"), gen, schemaId), epochId)
   }
